@@ -75,13 +75,13 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     from .operators.ball_join import ball_self_join, brute_ball_join
     from .operators.edges import edge_summary, write_edge_file, write_edges
     from .operators.partition import (
+        adaptive_voronoi_k,
         assign_two_level,
         coarse_group_of,
         voronoi_centers,
     )
     from .plans import metrics as M
     from .plans.session import get_spark, release_intermediates
-    from .queries import adaptive_voronoi_k
     from .sources import vecfiles
 
     if spark is None:

@@ -40,7 +40,6 @@ LEAF_EPS = float(np.finfo(np.float32).eps)
 DEFAULT_COVER = 1.55  # reference rgraph.cpp:21
 DEFAULT_LEAF_SIZE = 10  # reference rgraph.cpp:22
 
-_CHUNK = 8192  # rows per distance-matrix chunk (bounds peak memory)
 
 # Per-process distance-computation counter (reference: the global
 # ``dist_comps`` counter in include/point_vector.h:11, surfaced per run

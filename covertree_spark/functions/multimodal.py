@@ -25,15 +25,6 @@ IMAGE_META_SCHEMA = (
 FEATURE_SCHEMA = "id bigint, feat array<float>"
 
 
-def _fake_decode(payload: bytes) -> tuple[int, int, int, str]:
-    """Deterministic fake decode: dimensions derived from a content
-    hash. Stands in for a real image decoder (not in this env)."""
-    h = hashlib.sha256(payload).digest()
-    w = 64 + h[0] % 192
-    ht = 64 + h[1] % 192
-    return w, ht, 3, "fake"
-
-
 def _digest_matrix(payloads: list[bytes]) -> np.ndarray:
     """(n, 32) uint8 sha256 digests — ONE np.frombuffer over the
     concatenated digests; per-payload hashing is a C call (a real

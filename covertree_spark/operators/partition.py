@@ -24,6 +24,10 @@ stages:
                            (reference O2 ghost rule, :565-625,
                            generalized from "dist to center + 2r" to
                            the exact per-cell bound)
+  * ``adaptive_voronoi_k`` / ``adaptive_geo_res`` — cell counts sized
+                           from the row count and the parallelism
+  * ``align``            — the one ingest shuffle: persist points
+                           hash-partitioned on ``cell``
 
 All stats are pure functions of the data (never of the partitioning),
 so results are invariant to parallelism — the reference's test.sh
@@ -541,3 +545,69 @@ def replicate_ghosts(
     return points.mapInPandas(
         counted_stream(dilate, emit_bytes=True), schema=schema
     )
+
+
+# Partitioning policy: cells are sized from the data, never hardcoded
+# (a fixed geo res=2 capped every heavy stage at 16 tasks).
+TARGET_ROWS_PER_CELL = 100_000  # per-cell tree block target (geo)
+MAX_GEO_CELLS = 1 << 18  # caps broadcast stats at O(256k) entries
+TARGET_ROWS_PER_VCELL = 25_000  # fine Voronoi cell target (vector side)
+MAX_VORONOI_CELLS = 1 << 14  # caps broadcast stats at ~8MB of d=64 centroids
+MIN_COARSE_K = 8  # floor on coarse (partition) Voronoi cells
+
+
+def adaptive_voronoi_k(n_rows: int, parallelism: int) -> tuple[int, int, int]:
+    """(fine_k, coarse_k, sample_size) for the vector-side Voronoi
+    decomposition: cells cover the parallelism floor AND the
+    rows-per-cell target, so per-cell pandas groups stay bounded as the
+    table grows. The Gonzalez sample scales with k (>= 32 rows per
+    prospective center; the reference sizes centers by parallelism,
+    rgraph.py:20-29)."""
+    fine_k = int(
+        min(
+            max(16, 2 * parallelism, n_rows // TARGET_ROWS_PER_VCELL),
+            MAX_VORONOI_CELLS,
+        )
+    )
+    coarse_k = max(MIN_COARSE_K, fine_k // 8)
+    sample = int(min(max(4096, 32 * fine_k), 1 << 19))
+    return fine_k, coarse_k, sample
+
+
+def adaptive_geo_res(n_rows: int, parallelism: int) -> int:
+    """Smallest resolution whose cell count covers BOTH the
+    parallelism floor (2x cores, so every executor has waves of
+    tasks) and the rows-per-cell target (so per-cell tree blocks stay
+    bounded as rows grow)."""
+    want = min(
+        max(4, 2 * parallelism, n_rows // TARGET_ROWS_PER_CELL), MAX_GEO_CELLS
+    )
+    res = 1
+    while (1 << (2 * res)) < want:
+        res += 1
+    return res
+
+
+def align(pts: DataFrame, bucketed: bool = False) -> DataFrame:
+    """Persist the ALIGNED layout: hash-partitioned on ``cell`` with
+    exactly spark.sql.shuffle.partitions partitions — the ONE ingest
+    shuffle. Every downstream cogroup operator (kNN, ball join) then
+    reads homes in place (EnsureRequirements elides the home-side
+    Exchange), so per-query shuffles carry only candidates/ghosts,
+    never the table.
+
+    sortWithinPartitions: whole contiguous cell groups per partition,
+    so index construction over this layout runs strategy="aligned"
+    (zero additional shuffle); the intra-partition sort preserves the
+    hash outputPartitioning the cogroup elision depends on.
+
+    ``bucketed=True``: the input is a bucket-aware snapshot scan whose
+    hashpartitioning(cell, nparts) already satisfies the layout
+    contract, so resume pays ONLY the local sort + cache fill, zero
+    shuffle (Spark's bucket hash == the repartition hash). The local
+    sort is still needed: a bucket may span several sorted files whose
+    concatenation is not sorted."""
+    if not bucketed:
+        nparts = int(pts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        pts = pts.repartition(nparts, F.col("cell"))
+    return pts.sortWithinPartitions("cell").persist()

@@ -17,9 +17,8 @@ Two application points:
 * ``apply_malloc_reuse()`` — ctypes ``mallopt`` for the CURRENT
   process (env tunables are only read at exec time, so an
   already-running driver/test process needs the syscall form).
-* ``child_env()`` / the env vars set in ``session.get_spark`` — for
-  processes we fork+exec (the JVM, and through it every Python
-  worker; subprocess probes in scaling.py/bench.py), which read the
+* the env vars set in ``session.get_spark`` — for processes we
+  fork+exec (the JVM, and through it every Python worker), which read the
   tunables at startup and get heap reuse from their first allocation.
 
 Opt out with ``COVERTREE_NO_MALLOC_TUNE=1`` (e.g. on memory-tight
@@ -65,12 +64,3 @@ def apply_malloc_reuse() -> bool:
     except (OSError, AttributeError):  # musl/macOS: no mallopt
         _applied = False
     return _applied
-
-
-def child_env(base: dict | None = None) -> dict:
-    """Environment for a subprocess that should start life with heap
-    reuse (glibc reads MALLOC_* tunables at exec)."""
-    env = dict(os.environ if base is None else base)
-    if os.environ.get("COVERTREE_NO_MALLOC_TUNE") != "1":
-        env.update(_ENV)
-    return env

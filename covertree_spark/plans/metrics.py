@@ -17,9 +17,9 @@ invisible. Here:
 
 Operators wrap their pandas-UDF iterator functions with
 ``counted_stream`` (mapInPandas) or ``counted_fn`` (applyInPandas /
-cogroup kernels) so each task adds its deltas on completion; bench.py
-installs fresh accumulators per query to emit ``dist_comps`` and
-``udf_wall_s`` in BENCH_r{N}.json.
+cogroup kernels) so each task adds its deltas on completion; the CLI
+and perfbench install fresh accumulators per operation to report
+``dist_comps`` and ``udf_wall_s``.
 
 The accumulators are captured in UDF closures at PLAN BUILD time, so
 ``install`` must run before the operator function is called. Driver-

@@ -36,7 +36,7 @@ def _package_zip() -> str:
 # ---- persisted-intermediate registry (caching contract) --------------------
 # Operators persist transient intermediates (candidate sets, input re-scans)
 # because several downstream jobs consume them. A long-lived session running
-# many queries (bench.py, the driver gate) would otherwise accumulate cached
+# many queries (the catalog gate, the benchmark) would otherwise accumulate cached
 # blocks until storage eviction (ADVICE round 1). Operators register such
 # DataFrames here; callers release them once the query's result is
 # materialized. Inputs the CALLER persisted (e.g. the catalog's

@@ -68,18 +68,6 @@ def run_ingest(
     q.awaitTermination()
 
 
-def windowed_cell_counts(pages: DataFrame, res: int, window: str = "1 hour") -> DataFrame:
-    """Streaming per-cell arrival histogram with late-data handling:
-    watermarked event-time windows over warc_ts — the streaming analog
-    of the load-bearing cell histogram (reference A3)."""
-    pts = stream_points(pages, res)
-    return (
-        pts.withWatermark("warc_ts", "2 hours")
-        .groupBy(F.window("warc_ts", window), F.col("cell"))
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
 def stream_dedup_pages(pages: DataFrame, watermark: str | None = None) -> DataFrame:
     """Streaming EXACT dedup: first occurrence of each distinct text
     survives — the incremental form of ``dedup.exact_dedup_keep``.
