@@ -7,10 +7,11 @@ symmetric edge set, /root/reference/src/dist_graph.cpp:12-21).
 Physical plan (the reference's cvor pipeline re-expressed,
 /root/reference/src/dist_point_vector.cpp:962-996):
 
-  points(id, vec, cell)
-    -> cell_stats (2 JVM aggs)        [broadcast]
-    -> replicate_ghosts (mapInPandas) [explode candidate cells]
-    -> grouped_apply on cell          [ONE repartitionByRange shuffle]
+  points(id, vec, cell)                [aligned: partition.align]
+    -> cell_stats (2 JVM aggs)          [broadcast]
+    -> replicate_ghosts (mapInPandas)   [one row per foreign candidate cell]
+    -> ghosts cogroup homes on cell     [only the ghost side is shuffled;
+                                         homes are read in place]
          per cell: build cover tree over home points,
                    batched radius query for home+ghost rows
     -> edges(src, dst, dist)
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import covertree as ct
-from ..plans.grouped import grouped_apply
+from ..plans.metrics import counted_fn, counted_stream
 from ..plans.session import mark_releasable
 from ..sources.tables import vec_matrix
 from .partition import CellStats, cell_stats, replicate_ghosts
@@ -41,8 +42,6 @@ def ball_self_join(
     d: int,
     cover: float = ct.DEFAULT_COVER,
     leaf_size: int = ct.DEFAULT_LEAF_SIZE,
-    strategy: str = "cogroup",
-    cell_col: str = "cell",
     fine_col: str | None = None,
     brute_cutoff: int = 1024,
     stats: CellStats | None = None,
@@ -50,10 +49,12 @@ def ball_self_join(
     """points must carry (id, vec, cell). Returns (src, dst, dist),
     src != dst, both directions.
 
-    ``strategy``: "cogroup" (default; A/B'd fastest at sf0.1 — 0.9-1.1s
-    vs 1.0-1.1 hash_shuffle, 1.45-1.55 range) shuffles ONLY ghost rows
-    against the aligned home layout; the others push home+ghosts
-    through one explicit repartition.
+    Plan: ghost rows cogrouped against the home rows by cell. On the
+    aligned layout (``partition.align``) EnsureRequirements elides the
+    home-side Exchange, so only GHOST rows move through the shuffle.
+    Ghost volume is boundary-sized (O(surface), not O(volume)), so the
+    per-query shuffle is the replication halo, not the table. Any other
+    layout is still correct; its homes are shuffled once more.
 
     Caching contract: with ``stats=None`` the input is persisted and
     registered releasable (see knn_self_join docstring); passing
@@ -62,11 +63,23 @@ def ball_self_join(
     if stats is None:
         # scanned by stats (2x), ghosts, homes
         points = mark_releasable(points.persist())
-        stats = cell_stats(points, d, cell_col, fine_col)
+        stats = cell_stats(points, d, fine_col=fine_col)
     stats_bc = spark.sparkContext.broadcast(stats)
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    ghosts = replicate_ghosts(points, stats_bc, radius)
+    home_g = points.select("cell", "id", "vec")
 
-    def _edges_kernel(H, hid, Q, qid) -> pd.DataFrame:
+    def per_cell(ghost_pdf: pd.DataFrame, home_pdf: pd.DataFrame) -> pd.DataFrame:
+        if home_pdf.empty:
+            return pd.DataFrame({"src": [], "dst": [], "dist": []}).astype(
+                {"src": "int64", "dst": "int64", "dist": "float64"}
+            )
+        H = vec_matrix(home_pdf)
+        hid = home_pdf["id"].to_numpy()
+        if ghost_pdf.empty:
+            Q, qid = H, hid
+        else:
+            Q = np.concatenate([H, vec_matrix(ghost_pdf)])
+            qid = np.concatenate([hid, ghost_pdf["id"].to_numpy()])
         if len(H) <= brute_cutoff:
             # small build side: a BLAS matrix pass beats tree descent
             # (and in high-d with r near the distance concentration the
@@ -82,57 +95,11 @@ def ball_self_join(
         keep = src != dst
         return pd.DataFrame({"src": src[keep], "dst": dst[keep], "dist": di[keep]})
 
-    if strategy == "cogroup":
-        # ALIGNED HOME SIDE (see knn_self_join): only GHOST rows move
-        # through the shuffle; homes are read in place from the
-        # persisted hash(cell)-partitioned layout (Exchange elided).
-        # Ghost volume is boundary-sized (O(surface), not O(volume)),
-        # so at 10^12 rows the per-query shuffle shrinks from the full
-        # table to the replication halo.
-        from ..plans.metrics import counted_fn
-
-        ghosts = replicate_ghosts(
-            points, stats_bc, radius, cell_col, ghosts_only=True
-        )
-        home_g = points.select(F.col(cell_col).alias("cell"), "id", "vec")
-
-        def per_cell_cg(ghost_pdf: pd.DataFrame, home_pdf: pd.DataFrame) -> pd.DataFrame:
-            if home_pdf.empty:
-                return pd.DataFrame({"src": [], "dst": [], "dist": []}).astype(
-                    {"src": "int64", "dst": "int64", "dist": "float64"}
-                )
-            H = vec_matrix(home_pdf)
-            hid = home_pdf["id"].to_numpy()
-            if ghost_pdf.empty:
-                Q, qid = H, hid
-            else:
-                G = vec_matrix(ghost_pdf)
-                Q = np.concatenate([H, G])
-                qid = np.concatenate([hid, ghost_pdf["id"].to_numpy()])
-            return _edges_kernel(H, hid, Q, qid)
-
-        return (
-            ghosts.groupby("cell")
-            .cogroup(home_g.groupby("cell"))
-            .applyInPandas(counted_fn(per_cell_cg), schema=EDGE_SCHEMA)
-        )
-
-    assigned = replicate_ghosts(points, stats_bc, radius, cell_col)
-
-    def per_cell(_cell, pdf: pd.DataFrame) -> pd.DataFrame:
-        home = pdf[~pdf["is_ghost"]]
-        if home.empty:
-            return pd.DataFrame({"src": [], "dst": [], "dist": []}).astype(
-                {"src": "int64", "dst": "int64", "dist": "float64"}
-            )
-        H = vec_matrix(home)
-        hid = home["id"].to_numpy()
-        Q = vec_matrix(pdf)
-        qid = pdf["id"].to_numpy()
-        return _edges_kernel(H, hid, Q, qid)
-
-    return grouped_apply(assigned, "cell", per_cell, EDGE_SCHEMA, strategy=strategy,
-                         num_partitions=nparts)
+    return (
+        ghosts.groupby("cell")
+        .cogroup(home_g.groupby("cell"))
+        .applyInPandas(counted_fn(per_cell), schema=EDGE_SCHEMA)
+    )
 
 
 def ball_self_join_bin_counts(
@@ -140,7 +107,6 @@ def ball_self_join_bin_counts(
     radii,
     d: int,
     stats: CellStats | None = None,
-    cell_col: str = "cell",
     src_mod2: int | None = None,
     dst_mod2: int | None = None,
     lt_only: bool = False,
@@ -182,18 +148,16 @@ def ball_self_join_bin_counts(
     spark = points.sparkSession
     if stats is None:
         points = mark_releasable(points.persist())
-        stats = cell_stats(points, d, cell_col, None)
+        stats = cell_stats(points, d)
     stats_bc = spark.sparkContext.broadcast(stats)
     radii = [float(r) for r in radii]
     rmax = radii[-1]
     m = len(radii)
-    from ..plans.metrics import counted_fn
-
     gsrc = points
     if src_mod2 is not None:
         gsrc = points.where(F.pmod(F.col("id"), F.lit(2)) == int(src_mod2))
-    ghosts = replicate_ghosts(gsrc, stats_bc, rmax, cell_col, ghosts_only=True)
-    home_g = points.select(F.col(cell_col).alias("cell"), "id", "vec")
+    ghosts = replicate_ghosts(gsrc, stats_bc, rmax)
+    home_g = points.select("cell", "id", "vec")
     schema = ", ".join(f"c{i} bigint" for i in range(m))
 
     def zeros_row() -> pd.DataFrame:
@@ -281,7 +245,5 @@ def brute_ball_join(points: DataFrame, radius: float) -> DataFrame:
             yield pd.DataFrame(
                 {"src": src[keep], "dst": dst[keep], "dist": np.sqrt(d2[hit][keep])}
             )
-
-    from ..plans.metrics import counted_stream
 
     return points.mapInPandas(counted_stream(scan), schema=EDGE_SCHEMA)

@@ -1299,8 +1299,8 @@ def embedding_neardup_pairs(
 
     On the unit sphere ``cos(a,b) >= tau  <=>  ||a-b|| <= sqrt(2-2tau)``,
     so this IS the engine's headline epsilon-ball self-join after
-    normalization — cell-partitioned with ghost replication, ONE
-    repartitionByRange shuffle, NO cartesian/nested-loop join (the
+    normalization — cell-partitioned with ghost replication, a
+    ghosts-only cogroup shuffle, NO cartesian/nested-loop join (the
     round-1 catalog entry was O(n^2) rows through a.id < b.id).
 
     ``unit_points``: (id, vec, cell[, cell_fine]) with L2-normalized

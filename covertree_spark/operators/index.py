@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core import covertree as ct
-from ..plans.grouped import grouped_apply
+from ..plans.metrics import counted_fn
 from ..sources.tables import vec_matrix
 
 # CSR arrays and the point block serialize as RAW LITTLE-ENDIAN BYTES
@@ -43,12 +43,19 @@ def build_trees(
     d: int,
     cover: float = ct.DEFAULT_COVER,
     leaf_size: int = ct.DEFAULT_LEAF_SIZE,
-    cell_col: str = "cell",
-    strategy: str = "range",
+    strategy: str | None = None,
 ) -> DataFrame:
-    """One row per cell: CSR tree + flattened point block + global ids."""
+    """One row per cell: CSR tree + flattened point block + global ids.
+    ``points`` must carry (id, vec, cell).
 
-    def per_cell(cell, pdf: pd.DataFrame) -> pd.DataFrame:
+    Plan: ``groupBy("cell").applyInPandas``, correct on any layout. On
+    the aligned layout (``partition.align``) Spark plans neither an
+    Exchange nor a Sort, so the build reads the cells in place.
+
+    ``strategy`` is ignored; it stays only because perfbench passes
+    it, and goes when a benchmark change repoints perfbench."""
+
+    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         X = vec_matrix(pdf)
         tree = ct.build(X, cover=cover, leaf_size=leaf_size)
         # per-cell pruning stats ride with the index row, so queries
@@ -69,7 +76,7 @@ def build_trees(
             blob, ptype = X.astype("<f8").ravel().tobytes(), "f8"
         return pd.DataFrame(
             {
-                "cell": [np.int64(cell)],
+                "cell": [np.int64(pdf["cell"].iloc[0])],
                 "n": [np.int64(len(pdf))],
                 "childarr": [tree.childarr.astype("<i8").tobytes()],
                 "childptrs": [tree.childptrs.astype("<i8").tobytes()],
@@ -83,12 +90,10 @@ def build_trees(
             }
         )
 
-    return grouped_apply(
-        points.select(cell_col, "id", "vec").withColumnRenamed(cell_col, "cell"),
-        "cell",
-        per_cell,
-        TREE_SCHEMA,
-        strategy=strategy,
+    return (
+        points.select("cell", "id", "vec")
+        .groupBy("cell")
+        .applyInPandas(counted_fn(per_cell), schema=TREE_SCHEMA)
     )
 
 

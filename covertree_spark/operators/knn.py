@@ -12,13 +12,16 @@ partition cover trees"):
     the true kth distance; candidate cells = {c : lb_c <= ub}.
     Emits (cell, qid, vec, rq=ub) — the cell-cover prune.
 
-  phase 2 (grouped_apply, ONE repartitionByRange shuffle): per cell,
-    build the cover tree over home points, run a radius query at each
-    query's rq, keep the k best per query locally.
+  phase 2 (cogrouped applyInPandas on cell): candidates grouped by
+    cell meet the home rows of that cell, read in place from the
+    aligned layout (only the candidate stream is shuffled); per cell,
+    build the cover tree over home points and keep the k best per
+    query locally.
 
-  merge: global top-k per query by (dist, id) via a window — exact
-    because every point closer than the kth distance lives in a
-    candidate cell (lb_c <= d <= ub).
+  merge: global top-k per query by (dist, id) in one hash aggregate —
+    collect_list of (dist, id), array_sort, slice to k. Exact because
+    every point closer than the kth distance lives in a candidate cell
+    (lb_c <= d <= ub).
 """
 
 from __future__ import annotations
@@ -27,33 +30,19 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import covertree as ct
-from ..plans.grouped import grouped_apply
 from ..plans.metrics import counted_fn, counted_stream
 from ..plans.session import mark_releasable
 from ..sources.tables import vec_matrix
 from .partition import CellStats, cell_stats
 
-CAND_SCHEMA = "cell bigint, qid bigint, vec array<float>, rq double, ncand int"
-PART_SCHEMA = "qid bigint, nid bigint, dist double, lrank int, ncand int"
+CAND_SCHEMA = "cell bigint, qid bigint, vec array<float>, rq double"
+PART_SCHEMA = "qid bigint, nid bigint, dist double"
 
-_PART_EMPTY_TYPES = {
-    "qid": "int64", "nid": "int64", "dist": "float64",
-    "lrank": "int32", "ncand": "int32",
-}
-
-
-def _local_ranks(qi: np.ndarray) -> np.ndarray:
-    """Positional rank within runs of equal qi (kernels return rows
-    grouped by query, sorted by (dist, id) within each query)."""
-    if not len(qi):
-        return np.empty(0, dtype=np.int32)
-    firsts = np.r_[0, np.flatnonzero(qi[1:] != qi[:-1]) + 1]
-    starts = np.repeat(firsts, np.diff(np.r_[firsts, len(qi)]))
-    return (np.arange(len(qi)) - starts + 1).astype(np.int32)
+_PART_EMPTY_TYPES = {"qid": "int64", "nid": "int64", "dist": "float64"}
 
 
 def _cand_matrix(qs: pd.DataFrame, H: np.ndarray, hid: np.ndarray) -> np.ndarray:
@@ -96,34 +85,60 @@ def _cell_knn_kernel(
     qs: pd.DataFrame,
     k: int,
     self_join: bool,
-    cover: float,
-    leaf_size: int,
     brute_cutoff: int,
+    tree_fn,
 ) -> pd.DataFrame:
     """Per-cell exact kNN of the candidate block ``qs`` against the
-    home block (H, hid). Shared by the union-shuffle, cogroup and
-    persisted-index paths — one kernel, three physical plans."""
+    home block (H, hid). Shared by the transient and persisted-index
+    paths; ``tree_fn()`` yields the block's cover tree (built here or
+    deserialized), called only when the block is above
+    ``brute_cutoff``."""
     Q = _cand_matrix(qs, H, hid)
     qids = qs["qid"].to_numpy()
     rq = qs["rq"].to_numpy()
     excl = qids if self_join else None
     if len(H) <= brute_cutoff:
         # chunked GEMM top-k: never materializes the dense radius
-        # hit set (which explodes on clustered data at a loose rq)
+        # hit set (which explodes on clustered data at a loose rq);
+        # on small blocks it also beats tree descent (~2x fewer dist
+        # comps and 3x less UDF wall measured at sf0.1)
         qi, pi, di = ct.brute_topk(
             Q, H, k, max_radius=rq, exclude_self_ids=excl, point_ids=hid
         )
     else:
-        tree = ct.build(H, cover=cover, leaf_size=leaf_size)
         # best-bound descent: rq only seeds the bound; it shrinks
         # per query as neighbors are found
         qi, pi, di = ct.knn_descend(
-            tree, H, Q, k, init_bound=rq, exclude_self_ids=excl, point_ids=hid
+            tree_fn(), H, Q, k, init_bound=rq, exclude_self_ids=excl,
+            point_ids=hid,
         )
-    nc = qs["ncand"].to_numpy()[qi].astype(np.int32)
-    return pd.DataFrame(
-        {"qid": qids[qi], "nid": hid[pi], "dist": di,
-         "lrank": _local_ranks(qi), "ncand": nc}
+    return pd.DataFrame({"qid": qids[qi], "nid": hid[pi], "dist": di})
+
+
+def _empty_parts() -> pd.DataFrame:
+    return pd.DataFrame({c: [] for c in _PART_EMPTY_TYPES}).astype(
+        _PART_EMPTY_TYPES
+    )
+
+
+def _candidates(queries: DataFrame, stats: CellStats, k: int,
+                self_join: bool) -> DataFrame:
+    """Phase 1 over ``queries`` (id, vec[, cell]) -> CAND_SCHEMA rows.
+    A self-join query set that carries its home ``cell`` ships a NULL
+    vec on the row targeting that cell (see _cand_matrix)."""
+    spark = queries.sparkSession
+    if len(stats.cell_ids) > 128 and stats.coarse_of is None:
+        stats = stats.with_hierarchy(n_coarse=64)
+    phase1 = make_phase1(
+        spark.sparkContext.broadcast(stats), k + 1 if self_join else k
+    )
+    qcols = [F.col("id"), F.col("vec")] + (
+        [F.col("cell").alias("home_cell")]
+        if self_join and "cell" in queries.columns
+        else []
+    )
+    return queries.select(*qcols).mapInPandas(
+        counted_stream(phase1, emit_bytes=True), schema=CAND_SCHEMA
     )
 
 
@@ -133,26 +148,23 @@ def knn_self_join(
     d: int,
     cover: float = ct.DEFAULT_COVER,
     leaf_size: int = ct.DEFAULT_LEAF_SIZE,
-    strategy: str = "cogroup",
-    cell_col: str = "cell",
     fine_col: str | None = None,
     queries: DataFrame | None = None,
     brute_cutoff: int = 1024,
     stats: CellStats | None = None,
-    merge: str = "auto",
-    n_queries: int | None = None,
 ) -> DataFrame:
     """Exact kNN of every query against ``points`` (self-join by
-    default: queries = points, self-pairs excluded). Returns
-    (src, dst, rank, dist) with rank 1..k ordered by (dist, dst).
+    default: queries = points, self-pairs excluded). ``points`` must
+    carry (id, vec, cell). Returns (src, dst, rank, dist) with rank
+    1..k ordered by (dist, dst).
 
-    ``strategy`` (identical results, A/B'd at sf0.1 on local[32],
-    warm seconds over 3 runs): "cogroup" 1.8-2.1 — candidates-only
-    shuffle against the aligned home layout, the default and the only
-    shape whose shuffle volume is independent of table size;
-    "range" 2.3-2.5 — one repartitionByRange of home+candidates (pays
-    a sampling job + candidate persist); "hash_shuffle" 2.3-5.1 — same
-    union through a hash repartition.
+    Plan: phase-1 candidates cogrouped against the home rows by cell.
+    The cogrouped pandas apply requires hash(cell) on both children;
+    when ``points`` is persisted hash-partitioned on ``cell`` with
+    spark.sql.shuffle.partitions partitions (``partition.align``, the
+    ONE ingest shuffle), EnsureRequirements elides the home-side
+    Exchange and ONLY the candidate stream moves. Any other layout is
+    still correct; its homes are shuffled once more.
 
     Caching contract: when ``stats`` is None the input is persisted
     (three downstream scans) and registered with
@@ -161,181 +173,55 @@ def knn_self_join(
     materializing the result. Passing a precomputed ``stats`` (see
     ``partition.cell_stats``) skips the two stats scans AND the
     input persist — the caller owns the input's storage level."""
-    spark = points.sparkSession
     if stats is None:
         # scanned by stats (2x), homes, (queries)
         points = mark_releasable(points.persist())
-        stats = cell_stats(points, d, cell_col, fine_col)
-    if len(stats.cell_ids) > 128 and stats.coarse_of is None:
-        stats = stats.with_hierarchy(n_coarse=64)
-    stats_bc = spark.sparkContext.broadcast(stats)
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    qdf = queries if queries is not None else points
+        stats = cell_stats(points, d, fine_col=fine_col)
     self_join = queries is None
-    need = k + 1 if self_join else k  # +1 absorbs the self-hit
-    phase1 = make_phase1(stats_bc, need)
-    # no persist: with the cogroup/hash_shuffle strategies phase 1
-    # streams straight into the ONE explicit shuffle (a range
-    # partitioner would sample the input in an extra job, forcing a
-    # ~row-sized persist of the candidate set).
-    # Self-join phase 1 also sees each query's HOME cell so the
-    # candidate row targeting it ships a NULL vec (see _cand_matrix) —
-    # the dominant shuffle payload drops to the foreign-cell fringe.
-    qcols = [F.col("id"), F.col("vec")] + (
-        [F.col(cell_col).alias("home_cell")] if self_join else []
+    candidates = _candidates(
+        points if self_join else queries, stats, k, self_join
     )
-    candidates = qdf.select(*qcols).mapInPandas(
-        counted_stream(phase1, emit_bytes=True), schema=CAND_SCHEMA
-    )
-    if strategy == "range":
-        candidates = mark_releasable(candidates.persist())
+    home_g = points.select("cell", "id", "vec")
 
-    if strategy == "cogroup":
-        # ALIGNED HOME SIDE: the home table never re-shuffles. The
-        # cogrouped pandas apply requires hash(cell) on both children;
-        # when ``points`` is already persisted hash-partitioned on
-        # ``cell_col`` with spark.sql.shuffle.partitions partitions
-        # (the catalog's prepared layout — the ONE ingest shuffle),
-        # EnsureRequirements elides the home-side Exchange and ONLY
-        # the candidate stream moves (verified by .explain:
-        # InMemoryTableScan -> Sort with no Exchange). This kills the
-        # full-table home shuffle per query batch — the round-2
-        # VERDICT's #2 scale defect: at 10^12 rows the union path
-        # re-shuffled every home byte per invocation.
-        home_g = points.select(F.col(cell_col).alias("cell"), "id", "vec")
-
-        def per_cell_cg(cand_pdf: pd.DataFrame, home_pdf: pd.DataFrame) -> pd.DataFrame:
-            if cand_pdf.empty or home_pdf.empty:
-                return pd.DataFrame(
-                    {c: [] for c in _PART_EMPTY_TYPES}
-                ).astype(_PART_EMPTY_TYPES)
-            H = vec_matrix(home_pdf)
-            hid = home_pdf["id"].to_numpy()
-            return _cell_knn_kernel(
-                H, hid, cand_pdf, k, self_join, cover, leaf_size, brute_cutoff
-            )
-
-        parts = (
-            candidates.groupby("cell")
-            .cogroup(home_g.groupby("cell"))
-            .applyInPandas(counted_fn(per_cell_cg), schema=PART_SCHEMA)
-        )
-        return _merge_topk(parts, k, _merge_mode(stats, k, merge, nq=n_queries))
-
-    home = points.select(F.col(cell_col).alias("cell"), "id", "vec")
-    tagged_home = home.select(
-        "cell", F.col("id").alias("qid"), "vec", F.lit(float("nan")).alias("rq"),
-        F.lit(0).cast("int").alias("ncand"), F.lit(False).alias("is_query"),
-    )
-    tagged_q = candidates.select(
-        "cell", "qid", "vec", "rq", "ncand", F.lit(True).alias("is_query")
-    )
-    assigned = tagged_home.unionByName(tagged_q)
-
-    def per_cell(_cell, pdf: pd.DataFrame) -> pd.DataFrame:
-        homes = pdf[~pdf["is_query"]]
-        qs = pdf[pdf["is_query"]]
-        if homes.empty or qs.empty:
-            return pd.DataFrame(
-                {c: [] for c in _PART_EMPTY_TYPES}
-            ).astype(_PART_EMPTY_TYPES)
-        H = vec_matrix(homes)
-        hid = homes["qid"].to_numpy()  # home rows carry their point id in qid
+    def per_cell(cand_pdf: pd.DataFrame, home_pdf: pd.DataFrame) -> pd.DataFrame:
+        if cand_pdf.empty or home_pdf.empty:
+            return _empty_parts()
+        H = vec_matrix(home_pdf)
         return _cell_knn_kernel(
-            H, hid, qs, k, self_join, cover, leaf_size, brute_cutoff
+            H, home_pdf["id"].to_numpy(), cand_pdf, k, self_join, brute_cutoff,
+            lambda: ct.build(H, cover=cover, leaf_size=leaf_size),
         )
 
-    parts = grouped_apply(assigned, "cell", per_cell, PART_SCHEMA, strategy=strategy,
-                          num_partitions=nparts)
-    return _merge_topk(parts, k, _merge_mode(stats, k, merge, nq=n_queries))
-
-
-# below this many expected partial rows (~n x k), the one-pass window
-# merge beats the split: the split's persist + eager count cost two
-# extra jobs + a cache write that dwarf the small window shuffle
-# (A/B at sf0.1: 1.15s vs 1.76s warm)
-SMALL_MERGE_ROWS = 4_000_000
-
-
-def _merge_topk(parts: DataFrame, k: int, mode: str = "split") -> DataFrame:
-    """Global top-k merge of per-cell partial results.
-
-    ``mode="split"`` (the SCALE plan): single-candidate-cell queries'
-    per-cell local rank IS the global rank (no other cell can
-    contribute) — they skip the merge shuffle entirely; only
-    multi-cell queries pay the window. On clustered data that keeps
-    ~90% of the n x k partial rows out of the merge Exchange — at
-    10^12 rows the difference between shuffling the fringe and
-    shuffling a table. ``parts`` is persisted AND eagerly materialized
-    first: the single/multi split reads it from TWO branches of a
-    union, and under AQE those branches compile to INDEPENDENT query
-    stages that can run concurrently — each misses the still-empty
-    cache and re-executes the reduce-side phase-2 kernels (a RACY
-    double-compute: the same plan measured 31s on two runs and 59s/2x
-    dist_comps on a third). The count() pins the cache before either
-    branch reads it.
-
-    ``mode="window"`` (the SMALL plan): one unconditional merge pass
-    — a single consumer, so no persist, no eager count, no race
-    hazard at all; correct at any size but shuffles every partial
-    row. Callers pick via the expected row count (SMALL_MERGE_ROWS).
-    r6: rendered as a hash aggregate collecting each query's partials
-    into one array + an in-row sort/slice instead of a window — the
-    global sort-by-(qid, dist) becomes a per-query O(partials log
-    partials) array_sort on <= (candidate cells x k) elements, and
-    rank-identical by construction: lexicographic struct(dist, nid)
-    ordering IS the window's (dist asc, nid asc) order, and the
-    1-based slice position IS row_number <= k (A/B'd ~7% faster at
-    sf0.1; per-query partials are bounded by the phase-1 cell cover,
-    so the collected array is never hot)."""
-    if mode == "window":
-        agg = parts.groupBy("qid").agg(
-            F.slice(
-                F.array_sort(F.collect_list(F.struct("dist", "nid"))), 1, k
-            ).alias("top")
-        )
-        return agg.select(
-            F.col("qid").alias("src"),
-            F.posexplode("top").alias("pos", "t"),
-        ).select(
-            "src",
-            F.col("t.nid").alias("dst"),
-            (F.col("pos") + 1).cast("int").alias("rank"),
-            F.col("t.dist").alias("dist"),
-        )
-    parts = mark_releasable(parts.persist())
-    parts.count()
-    single = parts.filter(F.col("ncand") <= 1).select(
-        "qid", "nid", "dist", F.col("lrank").alias("rank")
+    parts = (
+        candidates.groupby("cell")
+        .cogroup(home_g.groupby("cell"))
+        .applyInPandas(counted_fn(per_cell), schema=PART_SCHEMA)
     )
-    multi = parts.filter(F.col("ncand") > 1)
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nid").asc())
-    merged = (
-        multi.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "dist", "rank")
+    return _merge_topk(parts, k)
+
+
+def _merge_topk(parts: DataFrame, k: int) -> DataFrame:
+    """Global top-k merge of per-cell partial results in one pass: a
+    hash aggregate collects each query's partials into one array, then
+    an in-row array_sort and slice. Lexicographic struct(dist, nid)
+    order is the (dist asc, nid asc) ranking, and the 1-based slice
+    position is the rank. Per-query partials are bounded by the
+    phase-1 cell cover (<= candidate cells x k elements), so the
+    collected array is never hot."""
+    agg = parts.groupBy("qid").agg(
+        F.slice(
+            F.array_sort(F.collect_list(F.struct("dist", "nid"))), 1, k
+        ).alias("top")
     )
-    return single.unionByName(merged).select(
+    return agg.select(
         F.col("qid").alias("src"),
-        F.col("nid").alias("dst"),
-        F.col("rank").cast("int").alias("rank"),
-        F.col("dist"),
+        F.posexplode("top").alias("pos", "t"),
+    ).select(
+        "src",
+        F.col("t.nid").alias("dst"),
+        (F.col("pos") + 1).cast("int").alias("rank"),
+        F.col("t.dist").alias("dist"),
     )
-
-
-def _merge_mode(
-    stats: CellStats, k: int, merge: str, nq: int | None = None
-) -> str:
-    """``merge="auto"`` sizes the split/window choice from the EXPECTED
-    partial rows ~ (#queries x k). Without ``nq`` that defaults to the
-    points-table count — exact for self-joins, conservative for an
-    explicit small query set over a large table (round-4 ADVICE: such
-    callers pass ``n_queries`` to knn_self_join/knn_over_index; a
-    .count() job here would cost more than the misprediction)."""
-    if merge in ("split", "window"):
-        return merge
-    n = int(stats.counts.sum()) if nq is None else int(nq)
-    return "window" if n * max(1, k) <= SMALL_MERGE_ROWS else "split"
 
 
 def make_phase1(stats_bc, need: int):
@@ -343,7 +229,7 @@ def make_phase1(stats_bc, need: int):
     function: per query, an upper bound on its ``need``-th distance
     from the broadcast stats, then candidate cells = every cell whose
     lower bound clears it. Shared by knn_self_join (transient trees)
-    and knn_over_index (persisted trees)."""
+    and the knn_over_index* reads (persisted trees)."""
 
     def phase1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         st: CellStats = stats_bc.value
@@ -440,10 +326,6 @@ def _phase1_chunk(st, order_counts, pdf, need):
     uk = np.unique(key)
     qi2 = uk // stride
     tgt = uk % stride
-    # candidate-cell count per query row: queries in exactly one
-    # cell skip the global merge entirely (their local top-k is
-    # already final)
-    ncand = np.bincount(qi2, minlength=len(pdf))[qi2].astype(np.int32)
     vecs = pdf["vec"].to_numpy()[qi2]
     if "home_cell" in pdf.columns:
         # vec elision (see _cand_matrix): the row targeting the
@@ -457,7 +339,6 @@ def _phase1_chunk(st, order_counts, pdf, need):
             "qid": pdf["id"].to_numpy()[qi2],
             "vec": vecs,
             "rq": ub_k[qi2],
-            "ncand": ncand,
         }
     )
 
@@ -470,7 +351,6 @@ def knn_over_index(
     stats: CellStats,
     self_join: bool = True,
     brute_cutoff: int = 1024,
-    merge: str = "auto",
     n_queries: int | None = None,
 ) -> DataFrame:
     """Exact kNN answered from a PERSISTED per-cell cover-tree index
@@ -483,31 +363,18 @@ def knn_over_index(
     apply — candidates grouped by cell meet the one tree row of that
     cell; ``ct.knn_descend`` runs against the deserialized CSR arrays.
     The tree blobs move through ONE hash shuffle keyed by cell (no
-    per-row duplication of the index).
+    per-row duplication of the index), or none on an aligned index.
 
     Returns (src, dst, rank, dist) — identical to knn_self_join on the
     same points (tests + the knn_over_index catalog entry assert it).
-    """
-    spark = queries.sparkSession
-    if len(stats.cell_ids) > 128 and stats.coarse_of is None:
-        stats = stats.with_hierarchy(n_coarse=64)
-    stats_bc = spark.sparkContext.broadcast(stats)
-    need = k + 1 if self_join else k
-    phase1 = make_phase1(stats_bc, need)
-    # cogroup's groupby is a hash shuffle (no sampling pass), so the
-    # candidate stream flows straight in — no persist needed; a cell
-    # column on the query side enables home-cell vec elision
-    qcols = [F.col("id"), F.col("vec")] + (
-        [F.col("cell").alias("home_cell")]
-        if self_join and "cell" in queries.columns
-        else []
-    )
-    candidates = queries.select(*qcols).mapInPandas(
-        counted_stream(phase1, emit_bytes=True), schema=CAND_SCHEMA
-    )
 
-    parts = _tree_parts(candidates, trees, k, self_join, brute_cutoff)
-    return _merge_topk(parts, k, _merge_mode(stats, k, merge, nq=n_queries))
+    ``n_queries`` is ignored; it stays only because perfbench passes
+    it, and goes when a benchmark change repoints perfbench.
+    """
+    candidates = _candidates(queries, stats, k, self_join)
+    return _merge_topk(
+        _tree_parts(candidates, trees, k, self_join, brute_cutoff), k
+    )
 
 
 def _tree_parts(
@@ -522,34 +389,12 @@ def _tree_parts(
     single-index and generation-chain read paths."""
     from .index import tree_from_row
 
-    def per_cell(_key, cand_pdf: pd.DataFrame, tree_pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_cell(cand_pdf: pd.DataFrame, tree_pdf: pd.DataFrame) -> pd.DataFrame:
         if cand_pdf.empty or tree_pdf.empty:
-            return pd.DataFrame(
-                {c: [] for c in _PART_EMPTY_TYPES}
-            ).astype(_PART_EMPTY_TYPES)
+            return _empty_parts()
         tree, H, hid = tree_from_row(tree_pdf.iloc[0])
-        Q = _cand_matrix(cand_pdf, H, hid)
-        qids = cand_pdf["qid"].to_numpy()
-        rq = cand_pdf["rq"].to_numpy()
-        excl = qids if self_join else None
-        if len(H) <= brute_cutoff:
-            # same policy as _cell_knn_kernel: on small blocks the
-            # f32-prefilter GEMM top-k beats tree descent (~2x fewer
-            # dist comps and 3x less UDF wall measured at sf0.1) —
-            # the persisted tree pays off on the large cells it
-            # exists for, not the small ones
-            qi, pi, di = ct.brute_topk(
-                Q, H, k, max_radius=rq, exclude_self_ids=excl, point_ids=hid
-            )
-        else:
-            qi, pi, di = ct.knn_descend(
-                tree, H, Q, k, init_bound=rq, exclude_self_ids=excl,
-                point_ids=hid,
-            )
-        nc = cand_pdf["ncand"].to_numpy()[qi].astype(np.int32)
-        return pd.DataFrame(
-            {"qid": qids[qi], "nid": hid[pi], "dist": di,
-             "lrank": _local_ranks(qi), "ncand": nc}
+        return _cell_knn_kernel(
+            H, hid, cand_pdf, k, self_join, brute_cutoff, lambda: tree
         )
 
     return (
@@ -582,7 +427,6 @@ def knn_over_index_chain(
     stats: CellStats | None = None,
     self_join: bool = True,
     brute_cutoff: int = 1024,
-    merge: str = "auto",
     n_queries: int | None = None,
 ) -> DataFrame:
     """Exact kNN over an LSM-style CHAIN of index generations (see
@@ -595,16 +439,16 @@ def knn_over_index_chain(
 
     Plan shape (the 100 TB case): cell ownership resolves driver-side
     (O(#cells) smalls); ONE phase-1 pass prunes with the merged
-    owned-cell stats; the candidate stream — persisted once, eagerly
-    materialized (the AQE union-branch race discipline of
-    ``_merge_topk``) — is split by owning generation and cogrouped
-    against each generation's trees separately. Cells partition
-    cleanly across generations, so each candidate row runs in exactly
-    one branch; the base side keeps its at-rest bucket alignment
-    (filters preserve partitioning — no data-sized Exchange appears),
-    and deltas are small by construction. Partial unions feed the
-    standard merge; ``ncand`` comes from the joint phase 1, so the
-    single-candidate-cell merge skip stays globally correct.
+    owned-cell stats; the candidate stream — persisted once and
+    eagerly materialized, because under AQE the union branches compile
+    to independent stages that would each re-run phase 1 against a
+    cold cache — is split by owning generation and cogrouped against
+    each generation's trees separately. Cells partition cleanly across
+    generations, so each candidate row runs in exactly one branch; the
+    base side keeps its at-rest bucket alignment (filters preserve
+    partitioning — no data-sized Exchange appears), and deltas are
+    small by construction. The unioned partials feed the standard
+    one-pass merge.
 
     Exactness under per-branch search: phase-1's ub guarantees >= k
     points within ub across the UNION of owned cells; any cell (in any
@@ -616,10 +460,12 @@ def knn_over_index_chain(
     own summary columns (the index stays self-describing); callers
     holding a finer stats sidecar for the logical merged index may
     pass it instead.
+
+    ``n_queries`` is ignored; it stays only because perfbench passes
+    it, and goes when a benchmark change repoints perfbench.
     """
     from .index import stats_from_trees
 
-    spark = queries.sparkSession
     # ---- driver-side cell ownership (newest generation wins) -----------
     gen_cells = [
         np.sort(
@@ -650,23 +496,9 @@ def knn_over_index_chain(
             centroids=np.concatenate([s.centroids for s in parts_stats]),
             circumradii=np.concatenate([s.circumradii for s in parts_stats]),
         )
-    if len(stats.cell_ids) > 128 and stats.coarse_of is None:
-        stats = stats.with_hierarchy(n_coarse=64)
-    stats_bc = spark.sparkContext.broadcast(stats)
-    need = k + 1 if self_join else k
-    phase1 = make_phase1(stats_bc, need)
-    qcols = [F.col("id"), F.col("vec")] + (
-        [F.col("cell").alias("home_cell")]
-        if self_join and "cell" in queries.columns
-        else []
+    candidates = mark_releasable(
+        _candidates(queries, stats, k, self_join).persist()
     )
-    candidates = queries.select(*qcols).mapInPandas(
-        counted_stream(phase1, emit_bytes=True), schema=CAND_SCHEMA
-    )
-    # several consumers read the candidate stream (one per generation):
-    # persist + eager count, or AQE compiles the branches as
-    # independent stages that each re-run phase 1 against a cold cache
-    candidates = mark_releasable(candidates.persist())
     candidates.count()
 
     parts = None
@@ -676,4 +508,4 @@ def knn_over_index_chain(
         cand_g = _cells_filter(candidates, own, keep=True)
         p = _tree_parts(cand_g, t, k, self_join, brute_cutoff)
         parts = p if parts is None else parts.unionByName(p)
-    return _merge_topk(parts, k, _merge_mode(stats, k, merge, nq=n_queries))
+    return _merge_topk(parts, k)

@@ -462,23 +462,14 @@ def cell_stats(
     )
 
 
-def replicate_ghosts(
-    points: DataFrame,
-    stats_bc,
-    radius: float,
-    cell_col: str = "cell",
-    ghosts_only: bool = False,
-) -> DataFrame:
-    """Boundary replication: emit (cell, id, vec, is_ghost) rows — the
-    home row plus one ghost row per foreign cell whose lower bound
-    <= radius. Exactness: if d(p,q) <= r and q is home in cell c, then
+def replicate_ghosts(points: DataFrame, stats_bc, radius: float) -> DataFrame:
+    """Boundary replication: emit one (cell, id, vec) ghost row per
+    foreign cell whose lower bound <= radius. Home rows are not
+    emitted: the ball join reads them in place from the partitioned
+    input. Exactness: if d(p,q) <= r and q is home in cell c, then
     lb_c(p) <= d(p,q) <= r, so p is replicated into c (reference ghost
     guarantee, dist_point_vector.cpp:583-596, with the tighter
-    centroid/circumradius bound).
-
-    ``ghosts_only=True`` suppresses the home rows — the cogroup ball
-    join reads homes from the already-partitioned input instead of
-    pushing every home byte back through the shuffle."""
+    centroid/circumradius bound)."""
 
     def dilate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         st: CellStats = stats_bc.value
@@ -498,8 +489,7 @@ def replicate_ghosts(
             from ..core.covertree import pairwise_sq_dists
 
             X = vec_matrix(pdf)
-            home = pdf[cell_col].to_numpy()
-            n = len(pdf)
+            home = pdf["cell"].to_numpy()
             # lb <= r  <=>  d2 <= (r + circ)^2 : one GEMM + one compare,
             # no sqrt pass over the big matrix (memory-bandwidth-bound).
             # 1e-9 relative slack: bounds carry float noise; replication
@@ -508,40 +498,21 @@ def replicate_ghosts(
             thr = radius * (1.0 + 1e-9) + st.circumradii
             cand = (d2 <= (thr * thr)[None, :]) & (coarse[None, :] != home[:, None])
             pi, ej = np.nonzero(cand)
-            if ghosts_only:
-                out_home = None
-            else:
-                out_home = pd.DataFrame(
-                    {
-                        "cell": home.astype(np.int64),
-                        "id": pdf["id"].to_numpy(),
-                        "vec": pdf["vec"].to_numpy(),
-                        "is_ghost": np.zeros(n, dtype=bool),
-                    }
-                )
             if len(pi):
                 # dedupe (point, partition-cell): several fine entries
                 # may map to the same coarse cell
                 key = pi.astype(np.int64) * stride + coarse[ej]
                 uk = np.unique(key)
                 pi2 = uk // stride
-                tgt = uk % stride
-                out_ghost = pd.DataFrame(
+                yield pd.DataFrame(
                     {
-                        "cell": tgt,
+                        "cell": uk % stride,
                         "id": pdf["id"].to_numpy()[pi2],
                         "vec": pdf["vec"].to_numpy()[pi2],
-                        "is_ghost": np.ones(len(pi2), dtype=bool),
                     }
                 )
-                if out_home is None:
-                    yield out_ghost
-                else:
-                    yield pd.concat([out_home, out_ghost], ignore_index=True)
-            elif out_home is not None:
-                yield out_home
 
-    schema = "cell bigint, id bigint, vec array<float>, is_ghost boolean"
+    schema = "cell bigint, id bigint, vec array<float>"
     return points.mapInPandas(
         counted_stream(dilate, emit_bytes=True), schema=schema
     )
@@ -597,9 +568,10 @@ def align(pts: DataFrame, bucketed: bool = False) -> DataFrame:
     never the table.
 
     sortWithinPartitions: whole contiguous cell groups per partition,
-    so index construction over this layout runs strategy="aligned"
-    (zero additional shuffle); the intra-partition sort preserves the
-    hash outputPartitioning the cogroup elision depends on.
+    so ``index.build_trees`` (a groupBy("cell") apply) over this layout
+    plans neither an Exchange nor a Sort; the intra-partition sort
+    preserves the hash outputPartitioning the cogroup elision depends
+    on.
 
     ``bucketed=True``: the input is a bucket-aware snapshot scan whose
     hashpartitioning(cell, nparts) already satisfies the layout

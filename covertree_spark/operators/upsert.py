@@ -64,7 +64,8 @@ def build_delta_trees(
     Every generation read is a cell filter over a bucketed-at-rest
     layout — sorted-by-cell parquet gives row-group pruning, so scan
     cost tracks the dirty fraction; the one repartition here moves only
-    dirty-cell points.
+    dirty-cell points, and the tree build reuses it (no second
+    Exchange).
 
     UPSERT semantics: per id, the NEWEST version wins (the batch
     outranks every committed generation). The last-writer resolution is
@@ -90,7 +91,7 @@ def build_delta_trees(
         .repartition(nparts, F.col("cell"))
         .sortWithinPartitions("cell")
     )
-    return build_trees(pts, d=d, strategy="aligned")
+    return build_trees(pts, d=d)
 
 
 def upsert_index(

@@ -48,9 +48,9 @@ def _package_zip() -> str:
 #     persist during that build registers with THAT scope. Call
 #     ``rs.release()`` after materializing the result. Interleaved
 #     queries are safe: each build's persists live in its own scope,
-#     so releasing query A never drops query B's ``parts`` persist
-#     (the foot-gun that silently reintroduced the kNN AQE union
-#     double-compute — dist_comps doubling was the regression signal).
+#     so releasing query A never drops a persist query B still reads
+#     (under AQE a dropped multi-consumer persist re-executes its
+#     kernels per consumer — dist_comps doubling is the signal).
 #   * release_intermediates() — the legacy global sweep, correct for
 #     the one-query-in-flight pattern. Registrations made outside any
 #     active scope land in the global registry it drains.
@@ -119,7 +119,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 8)
     # Worker-process memory hygiene, inherited via the JVM child env:

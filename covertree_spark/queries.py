@@ -2326,7 +2326,7 @@ def _geo_index(spark, sf_dir):
         # hash-partitioned straight off the scan — no tree-blob
         # re-shuffle anywhere (round-4 VERDICT #3)
         trees = wh.checkpoint(
-            build_trees(pts, d=3, strategy="aligned"), "geo_trees", snap,
+            build_trees(pts, d=3), "geo_trees", snap,
             bucket=("cell", nparts),
         )
         spec = wh.bucket_spec("geo_trees", snap)
@@ -2393,7 +2393,7 @@ def _geo_chain(spark, sf_dir):
         wh.checkpoint(base, "geochain_points", bsnap, bucket=("cell", nparts))
         btsnap = snapshot_id("geochain_trees", [bsnap], {"d": 3, "v": INDEX_V})
         wh.checkpoint(
-            build_trees(base, d=3, strategy="aligned"),
+            build_trees(base, d=3),
             "geochain_trees",
             btsnap,
             bucket=("cell", nparts),
@@ -3743,10 +3743,8 @@ def q_nn_event(spark, sf_dir):
     finalize's Python stage)."""
     epts, estats = _ev_points(spark, sf_dir)
     dpts, _ = _geo_points(spark, sf_dir)
-    n_docs = src.load_table(spark, sf_dir, "documents").count()
     nn = knn_self_join(
-        epts, k=1, d=3, stats=estats,
-        queries=dpts.select("id", "vec"), n_queries=n_docs,
+        epts, k=1, d=3, stats=estats, queries=dpts.select("id", "vec")
     )
     lon1, lat1 = geometry.sql_lonlat_exprs("src")
     lon2, lat2 = geometry.sql_lonlat_exprs("dst")
@@ -4879,13 +4877,11 @@ def q_event_knn(spark, sf_dir):
 
     Physical plan: the verified two-phase kNN with an EXTERNAL query
     set over the aligned events layout — homes in place, candidates-
-    only shuffle, the k=5 merge per query is one small window."""
+    only shuffle, the k=5 merge per query is one small collect-list sort."""
     epts, estats = _ev_points(spark, sf_dir)
     dpts, _ = _geo_points(spark, sf_dir)
-    n_docs = src.load_table(spark, sf_dir, "documents").count()
     knn = knn_self_join(
-        epts, k=EVKNN_K, d=3, stats=estats,
-        queries=dpts.select("id", "vec"), n_queries=n_docs,
+        epts, k=EVKNN_K, d=3, stats=estats, queries=dpts.select("id", "vec")
     )
     return knn.select(
         F.col("src").alias("doc_id"),

@@ -38,22 +38,17 @@ def answer_batch(
     k: int,
     d: int,
     stats: CellStats,
-    merge: str = "window",
 ) -> DataFrame:
     """One micro-batch of (id, vec) queries against the static index —
     a plain batch DataFrame in, exact (src, dst, rank, dist) out.
     ``index`` is either one trees DataFrame or an upsert-generation
-    chain (operators/upsert.read_index_chain output); micro-batches
-    are small relative to the table, so the merge defaults to the
-    one-pass window plan (callers can override)."""
+    chain (operators/upsert.read_index_chain output)."""
     q = batch.select("id", "vec")
     if isinstance(index, list):
         return knn_over_index_chain(
-            index, q, k=k, d=d, stats=stats, self_join=False, merge=merge
+            index, q, k=k, d=d, stats=stats, self_join=False
         )
-    return knn_over_index(
-        index, q, k=k, d=d, stats=stats, self_join=False, merge=merge
-    )
+    return knn_over_index(index, q, k=k, d=d, stats=stats, self_join=False)
 
 
 def run_stream_knn(

@@ -56,3 +56,21 @@ def test_identical_results_local2_vs_local8():
     assert lo["edges"] == hi["edges"]
     assert lo["knn"] == hi["knn"]
     assert len(lo["edges"]) > 0 and len(lo["knn"]) > 0
+
+
+def test_get_spark_defaults_to_all_cores():
+    """Without ``cpus`` or SPARK_GRAFT_CPUS, get_spark runs local[N]
+    on every core of the host (the CLI's ``--cpus`` default: all)."""
+    code = (
+        f"import sys; sys.path.insert(0, {REPO!r})\n"
+        "from covertree_spark.plans.session import get_spark\n"
+        "print(get_spark(app_name='default-cores').sparkContext.master)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    r = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        timeout=600, env=env,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert r.stdout.strip().splitlines()[-1] == f"local[{os.cpu_count()}]"

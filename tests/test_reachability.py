@@ -1,7 +1,9 @@
 """Static reachability of the package (``ast`` only, no Spark session).
 
 (a) Every name ``perfbench/worker.py`` takes from ``covertree_spark``
-resolves, so a deletion here cannot silently break the benchmark.
+resolves, and every keyword it passes to a package function is a
+parameter of that function, so a deletion here cannot silently break
+the benchmark.
 (b) Every module under ``covertree_spark/`` is imported, directly or
 transitively, by one of the system's entry points, so unreached code
 cannot grow back. The modules in ``KNOWN_UNREACHED`` predate the check:
@@ -118,6 +120,65 @@ def test_perfbench_names_resolve():
         if not any(_path_of(m) and name in _defined_names(m) for m in mods)
     ]
     assert not missing, missing
+
+
+def _find_def(module: str, name: str):
+    """The ``def`` (a class resolves to its ``__init__``) that ``name``
+    denotes in a package module, following re-export imports."""
+    path = _path_of(module)
+    for node in _tree(path).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and node.name == name:
+            return node
+        if isinstance(node, ast.ClassDef) and node.name == name:
+            return next(
+                (n for n in node.body
+                 if isinstance(n, ast.FunctionDef) and n.name == "__init__"),
+                None,
+            )
+        if isinstance(node, ast.ImportFrom):
+            for a in node.names:
+                if (a.asname or a.name) == name:
+                    return _find_def(_absolute(node, path), a.name)
+    return None
+
+
+def test_perfbench_keywords_are_parameters():
+    tree = _tree(os.path.join(REPO, "perfbench", "worker.py"))
+    funcs: dict[str, tuple[str, str]] = {}  # local name -> (module, name)
+    modules: dict[str, str] = {}  # local alias -> package module
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PKG):
+            for a in node.names:
+                full = f"{node.module}.{a.name}"
+                if _path_of(full):
+                    modules[a.asname or a.name] = full
+                else:
+                    funcs[a.asname or a.name] = (node.module, a.name)
+    checked, bad = set(), []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Name) and f.id in funcs:
+            target = funcs[f.id]
+        elif (isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name)
+              and f.value.id in modules):
+            target = (modules[f.value.id], f.attr)
+        else:
+            continue
+        fdef = _find_def(*target)
+        assert fdef is not None, f"worker.py:{node.lineno} {target} has no def"
+        a = fdef.args
+        params = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+        for kw in node.keywords:
+            if kw.arg is None or a.kwarg is not None:
+                continue
+            checked.add((target[1], kw.arg))
+            if kw.arg not in params:
+                bad.append(f"worker.py:{node.lineno} {target[1]}({kw.arg}=)")
+    assert {("build_trees", "strategy"), ("knn_over_index", "n_queries"),
+            ("cell_stats", "fine_col")} <= checked, "worker.py scan missed calls"
+    assert not bad, bad
 
 
 def test_every_module_is_reachable():

@@ -37,6 +37,20 @@ def geo_numpy(spark, geo_points):
     return X, ids
 
 
+def _layout(geo_points, layout):
+    """geo_points under one of the input layouts the single cogroup
+    plan must handle: as joined (``raw``), ``partition.align``ed (the
+    home-side Exchange is elided), hash-repartitioned on ``id``
+    (partitioned, but not by cell) and ``coalesce(1)``."""
+    if layout == "raw":
+        return geo_points
+    if layout == "aligned":
+        return pt.align(geo_points)
+    if layout == "misaligned":
+        return geo_points.repartition(7, "id")
+    return geo_points.coalesce(1)
+
+
 def test_geo_ball_join_matches_bruteforce(spark, geo_points, geo_numpy):
     X, ids = geo_numpy
     got = edges_set(ball_self_join(geo_points, GEO_R, d=3))
@@ -46,15 +60,48 @@ def test_geo_ball_join_matches_bruteforce(spark, geo_points, geo_numpy):
     assert got == expected
 
 
-@pytest.mark.parametrize("strategy", ["hash", "hash_shuffle", "range", "cogroup"])
-def test_geo_ball_join_strategy_parity(spark, geo_points, geo_numpy, strategy):
-    """Every physical strategy — including the aligned cogroup plan
-    that shuffles only ghosts — must produce the identical edge set."""
+@pytest.mark.parametrize("layout", ["raw", "aligned", "misaligned", "coalesced"])
+def test_geo_ball_join_strategy_parity(spark, geo_points, geo_numpy, layout):
+    """The one cogroup plan gives the brute-force edge set on every
+    input layout, whether or not the home-side Exchange is elided."""
     X, ids = geo_numpy
-    got = edges_set(ball_self_join(geo_points, GEO_R, d=3, strategy=strategy))
+    got = edges_set(ball_self_join(_layout(geo_points, layout), GEO_R, d=3))
     exp = brute_ball_edges(X, GEO_R)
     expected = sorted((int(ids[s]), int(ids[t])) for s, t in exp)
     assert got == expected
+
+
+def _shuffle_exchanges(df) -> int:
+    """Shuffle exchanges the physical plan of ``df`` adds. The walk
+    follows ``children`` only, so a cached relation's own plan (an
+    inner child of its InMemoryTableScan) is not counted."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    count, todo = 0, [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        count += name in ("ShuffleExchangeExec", "ShuffleQueryStageExec")
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return count
+
+
+def test_aligned_layout_plan_shape(spark, geo_points):
+    """Over the aligned layout the index build reads cells in place
+    (no shuffle), and the ball join shuffles only its ghost side."""
+    from covertree_spark.operators.index import build_trees
+
+    aligned = pt.align(geo_points)
+    try:
+        stats = pt.cell_stats(aligned, 3)
+        assert _shuffle_exchanges(build_trees(aligned, d=3)) == 0
+        assert _shuffle_exchanges(
+            ball_self_join(aligned, GEO_R, d=3, stats=stats)
+        ) == 1
+    finally:
+        aligned.unpersist()
 
 
 def test_voronoi_centers_exact_matches_numpy(spark):
@@ -82,11 +129,13 @@ def test_voronoi_centers_exact_matches_numpy(spark):
     assert np.array_equal(got, np.stack(cs))
 
 
-@pytest.mark.parametrize("strategy", ["hash_shuffle", "range", "cogroup"])
-def test_geo_knn_strategy_parity(spark, geo_points, geo_numpy, strategy):
+@pytest.mark.parametrize("layout", ["aligned", "misaligned", "coalesced"])
+def test_geo_knn_strategy_parity(spark, geo_points, geo_numpy, layout):
+    """kNN counterpart of the layout parity above (the raw layout is
+    test_geo_knn_matches_bruteforce)."""
     X, ids = geo_numpy
     k = 5
-    got = knn_self_join(geo_points, k=k, d=3, strategy=strategy)
+    got = knn_self_join(_layout(geo_points, layout), k=k, d=3)
     rows = sorted(
         (r["src"], r["rank"], r["dst"])
         for r in got.select("src", "rank", "dst").collect()
@@ -346,18 +395,33 @@ def test_voronoi_centers_exact_deep_k_parity(spark):
     assert np.array_equal(got, np.stack(cs))
 
 
-@pytest.mark.parametrize("merge", ["split", "window"])
-def test_geo_knn_merge_mode_parity(spark, geo_points, geo_numpy, merge):
-    """Both merge plans (scale split vs small-table single window)
-    must produce the identical ranked answer set; 'auto' picks by the
-    expected partial-row count."""
-    X, ids = geo_numpy
-    k = 5
-    got = knn_self_join(geo_points, k=k, d=3, merge=merge)
+@pytest.mark.parametrize("k", [1, 40])
+def test_geo_knn_merge_mode_parity(spark, k):
+    """The one-pass collect_list merge ranks exactly whether a query's
+    candidates sit in one cell or in many. Input: 16 blobs of 25
+    points, 10 apart, one cell each. At k=1 every query's candidates
+    are its own cell; at k=40 no query fits in one cell. (Geo cells
+    are adjacent, so no geo query has a single candidate cell.)"""
+    from covertree_spark.operators.knn import _candidates
+
+    rng = np.random.default_rng(5)
+    grid = np.stack(np.meshgrid(range(4), range(2), range(2)), -1).reshape(-1, 3)
+    cell = np.repeat(np.arange(16), 25)
+    X = (10.0 * grid[cell] + rng.normal(0, 0.1, (400, 3))).astype(np.float32)
+    ids = np.arange(400)
+    pts = spark.createDataFrame(
+        [(int(i), X[i].tolist(), int(cell[i])) for i in ids],
+        "id bigint, vec array<float>, cell bigint",
+    )
+    ncand = _candidates(pts, pt.cell_stats(pts, 3), k, True).groupBy("qid").count()
+    single = ncand.filter(F.col("count") == 1).count()
+    assert single == (len(ids) if k == 1 else 0)
+
+    got = knn_self_join(pts, k=k, d=3)
     rows = sorted(
         (r["src"], r["rank"], r["dst"]) for r in got.select("src", "rank", "dst").collect()
     )
-    qs, ps, _d = brute_knn(X, X, k, exclude_self_idx=np.arange(len(X)))
+    qs, ps, _d = brute_knn(X, X, k, exclude_self_idx=ids)
     expected = sorted(
         (int(ids[q]), int(r), int(ids[p]))
         for q, p, r in zip(qs, ps, list(_local_rank_of(qs)))
