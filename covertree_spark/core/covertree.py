@@ -354,86 +354,6 @@ def radius_query(
     return np.concatenate(out_q), np.concatenate(out_p), np.concatenate(out_d)
 
 
-def knn_query(
-    tree: CoverTree,
-    points: np.ndarray,
-    queries: np.ndarray,
-    k: int,
-    radius_hint=None,
-    exclude_self_ids: np.ndarray | None = None,
-    point_ids: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Exact k-nearest-neighbors via radius queries with geometric
-    expansion (the reference has no kNN — this is the BASELINE-required
-    extension; exactness is guaranteed because expansion continues until
-    >= k hits, then results are the k smallest by (dist, id)).
-
-    ``radius_hint``: optional scalar/per-query initial radius (e.g. the
-    two-phase plan's broadcast upper bound — when provided and valid it
-    already guarantees >= k hits, so no expansion rounds run).
-    ``exclude_self_ids``/``point_ids``: global ids used to drop
-    self-pairs before ranking.
-    Returns (query_idx, point_local_idx, dist), at most k per query.
-    """
-    P = np.asarray(points, dtype=np.float64)
-    Q = np.asarray(queries, dtype=np.float64)
-    nq, n = Q.shape[0], P.shape[0]
-    if nq == 0 or n == 0:
-        z = np.empty(0, dtype=np.int64)
-        return z, z, np.empty(0, dtype=np.float64)
-    kk = min(k, n)
-
-    root_rad = float(tree.radii[0])
-    if radius_hint is None:
-        # distance to root center always yields >= 1 hit
-        r = row_dists(Q, np.broadcast_to(P[tree.centers[0]], Q.shape)) + root_rad * 1e-3 + 1e-12
-    else:
-        r = np.broadcast_to(np.asarray(radius_hint, dtype=np.float64), (nq,)).copy()
-
-    pending = np.arange(nq, dtype=np.int64)
-    acc_q: list[np.ndarray] = []
-    acc_p: list[np.ndarray] = []
-    acc_d: list[np.ndarray] = []
-    max_r = root_rad * 2.0 + float(np.max(r)) + 1e-12
-    while pending.size:
-        qi, pi, di = radius_query(tree, P, Q[pending], r[pending])
-        qg = pending[qi]
-        if exclude_self_ids is not None and point_ids is not None:
-            keep = point_ids[pi] != exclude_self_ids[qg]
-            qg, pi, di = qg[keep], pi[keep], di[keep]
-        counts = np.bincount(qg, minlength=nq)
-        done = counts[pending] >= kk
-        done_set = pending[done]
-        if done_set.size:
-            sel = np.isin(qg, done_set)
-            acc_q.append(qg[sel])
-            acc_p.append(pi[sel])
-            acc_d.append(di[sel])
-        pending = pending[~done]
-        if pending.size:
-            grown = r[pending] * 2.0 + root_rad * 1e-6
-            r[pending] = grown
-            if np.all(r[pending] > max_r):
-                # whole tree now inside every ball: last round
-                qi, pi, di = radius_query(tree, P, Q[pending], r[pending])
-                qg = pending[qi]
-                if exclude_self_ids is not None and point_ids is not None:
-                    keep = point_ids[pi] != exclude_self_ids[qg]
-                    qg, pi, di = qg[keep], pi[keep], di[keep]
-                acc_q.append(qg)
-                acc_p.append(pi)
-                acc_d.append(di)
-                break
-
-    if not acc_q:
-        z = np.empty(0, dtype=np.int64)
-        return z, z, np.empty(0, dtype=np.float64)
-    qg = np.concatenate(acc_q)
-    pg = np.concatenate(acc_p)
-    dg = np.concatenate(acc_d)
-    return topk_per_query(qg, pg, dg, kk, tiebreak_ids=point_ids)
-
-
 def brute_topk(
     Q: np.ndarray,
     P: np.ndarray,

@@ -419,6 +419,31 @@ def _cells_filter(df: DataFrame, cells: np.ndarray, keep: bool) -> DataFrame:
     return df.join(F.broadcast(cdf), "cell", how)
 
 
+def owned_generations(gens: list[DataFrame]) -> list[tuple[DataFrame, np.ndarray]]:
+    """Cell ownership over a generation chain (oldest first): the
+    newest generation holding a cell owns it. Returns, oldest first,
+    each generation that owns at least one cell, as its rows restricted
+    to the cells it owns plus those cells (sorted). One driver-side
+    ``distinct`` collect per generation; a generation that owns all its
+    cells is not filtered."""
+    out: list[tuple[DataFrame, np.ndarray]] = []
+    taken = np.empty(0, dtype=np.int64)
+    for g in reversed(gens):
+        cells = np.sort(
+            np.array(
+                [r["cell"] for r in g.select("cell").distinct().collect()],
+                dtype=np.int64,
+            )
+        )
+        own = np.setdiff1d(cells, taken)
+        if len(own) == len(cells):
+            out.append((g, own))
+        elif len(own):
+            out.append((_cells_filter(g, own, keep=True), own))
+        taken = np.union1d(taken, cells)
+    return out[::-1]
+
+
 def knn_over_index_chain(
     gens: list[DataFrame],
     queries: DataFrame,
@@ -466,30 +491,9 @@ def knn_over_index_chain(
     """
     from .index import stats_from_trees
 
-    # ---- driver-side cell ownership (newest generation wins) -----------
-    gen_cells = [
-        np.sort(
-            np.array(
-                [r["cell"] for r in g.select("cell").distinct().collect()],
-                dtype=np.int64,
-            )
-        )
-        for g in gens
-    ]
-    taken = np.empty(0, dtype=np.int64)
-    owned: list[np.ndarray] = [None] * len(gens)
-    for i in range(len(gens) - 1, -1, -1):
-        owned[i] = np.setdiff1d(gen_cells[i], taken)
-        taken = np.union1d(taken, gen_cells[i])
-    owned_trees = [
-        g if len(own) == len(cells) else _cells_filter(g, own, keep=True)
-        for g, own, cells in zip(gens, owned, gen_cells)
-    ]
-
+    owned = owned_generations(gens)
     if stats is None:
-        parts_stats = [
-            stats_from_trees(t) for t, own in zip(owned_trees, owned) if len(own)
-        ]
+        parts_stats = [stats_from_trees(t) for t, _own in owned]
         stats = CellStats(
             cell_ids=np.concatenate([s.cell_ids for s in parts_stats]),
             counts=np.concatenate([s.counts for s in parts_stats]),
@@ -502,9 +506,7 @@ def knn_over_index_chain(
     candidates.count()
 
     parts = None
-    for t, own in zip(owned_trees, owned):
-        if not len(own):
-            continue
+    for t, own in owned:
         cand_g = _cells_filter(candidates, own, keep=True)
         p = _tree_parts(cand_g, t, k, self_join, brute_cutoff)
         parts = p if parts is None else parts.unionByName(p)

@@ -85,22 +85,9 @@ class CellStats:
         valid bound for every point of every member. Hierarchical
         phase-1 pruning then costs O(nq x G) + O(nq x surviving fine)
         instead of O(nq x C)."""
-        from ..core.covertree import dists_to
-
-        C = len(self.cell_ids)
-        G = min(n_coarse, C)
         cents = self.centroids
-        # Gonzalez over entry centroids (deterministic: start at 0)
-        chosen = [0]
-        mind = dists_to(cents, cents[0])
-        for _ in range(G - 1):
-            far = int(mind.argmax())
-            chosen.append(far)
-            mind = np.minimum(mind, dists_to(cents, cents[far]))
-        seeds = cents[np.asarray(chosen)]
-        from ..core.covertree import pairwise_sq_dists
-
-        grp = pairwise_sq_dists(cents, seeds).argmin(axis=1).astype(np.int64)
+        G = min(n_coarse, len(cents))
+        grp = coarse_group_of(cents, G)
         w = self.counts.astype(np.float64)
         gc = np.zeros((G, cents.shape[1]))
         gw = np.zeros(G)
@@ -191,20 +178,26 @@ def voronoi_centers(points: DataFrame, k: int, sample_size: int = 4096) -> np.nd
         .limit(sample_size)
         .toPandas()
     )
-    X = vec_matrix(pdf)
     ids = pdf["id"].to_numpy()
-    k = min(k, len(ids))
-    start = int(ids.argmin())
+    return _farthest_points(vec_matrix(pdf), ids, min(k, len(ids)))
+
+
+def _farthest_points(X: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Gonzalez greedy farthest-point picks over the rows of ``X``:
+    start at the smallest id, then repeatedly take the row farthest
+    from every pick so far, ties going to the larger id (matches
+    ``max_by(struct(dist, id))`` in voronoi_centers_exact).
+    Returns (k, d)."""
     from ..core.covertree import dists_to
 
-    centers = [X[start]]
+    start = int(ids.argmin())
+    picks = [X[start]]
     mind = dists_to(X, X[start])
     for _ in range(k - 1):
-        # tie-break by larger id (matches max_by(struct(dist,id)))
         far = int(np.lexsort((ids, mind))[-1])
-        centers.append(X[far])
+        picks.append(X[far])
         mind = np.minimum(mind, dists_to(X, X[far]))
-    return np.stack(centers)
+    return np.stack(picks)
 
 
 def voronoi_centers_exact(points: DataFrame, k: int, d: int) -> np.ndarray:
@@ -272,7 +265,7 @@ def refine_hot_centers(
     ``max_rounds`` regardless of the distribution."""
     from pyspark.sql import Window
 
-    from ..core.covertree import dists_to
+    from ..core.covertree import pairwise_sq_dists
 
     centers = np.asarray(centers, dtype=np.float64)
     for _ in range(max_rounds):
@@ -306,16 +299,7 @@ def refine_hot_centers(
             # blob (the hot-cell case by definition); the mean updates
             # split its mass evenly. All driver-side on the bounded
             # sample, deterministic.
-            start = int(ids.argmin())
-            subs = [X[start]]
-            mind = dists_to(X, X[start])
-            for _ in range(sub_k - 1):
-                far = int(np.lexsort((ids, mind))[-1])
-                subs.append(X[far])
-                mind = np.minimum(mind, dists_to(X, X[far]))
-            from ..core.covertree import pairwise_sq_dists
-
-            C = np.stack(subs)
+            C = _farthest_points(X, ids, sub_k)
             for _ in range(8):
                 a = pairwise_sq_dists(X, C).argmin(axis=1)
                 for j in range(sub_k):

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..plans.checkpoint import Warehouse, snapshot_id
 from .index import build_trees
-from .knn import _cells_filter
+from .knn import _cells_filter, owned_generations
 
 
 def dirty_cells(new_pts: DataFrame) -> np.ndarray:
@@ -188,21 +188,7 @@ def compact_index(
     read path applies, made durable). Rewrites each surviving tree row
     once; after compaction the chain's deltas are dangling and
     ``Warehouse.gc`` reclaims them."""
-    taken: np.ndarray = np.empty(0, dtype=np.int64)
-    owned_parts: list[DataFrame] = []
-    for g in reversed(gens):
-        cells = np.sort(
-            np.array(
-                [r["cell"] for r in g.select("cell").distinct().collect()],
-                dtype=np.int64,
-            )
-        )
-        own = np.setdiff1d(cells, taken)
-        if len(own):
-            owned_parts.append(
-                g if len(own) == len(cells) else _cells_filter(g, own, True)
-            )
-        taken = np.union1d(taken, cells)
+    owned_parts = [t for t, _own in owned_generations(gens)]
     merged = owned_parts[0]
     for p in owned_parts[1:]:
         merged = merged.unionByName(p)

@@ -77,7 +77,7 @@ def test_knn_matches_bruteforce(k):
     X = make_blobs(400, 6, 8, seed=4)
     tree = ct.build(X)
     ids = np.arange(X.shape[0])
-    qg, pg, dg = ct.knn_query(
+    qg, pg, dg = ct.knn_descend(
         tree, X, X, k, exclude_self_ids=ids, point_ids=ids
     )
     order = np.lexsort((pg, dg, qg))
@@ -96,8 +96,8 @@ def test_knn_with_radius_hint_exact():
     ids = np.arange(X.shape[0])
     # generous hint: must not change results
     hint = np.full(X.shape[0], 50.0)
-    qg, pg, dg = ct.knn_query(tree, X, X, 7, radius_hint=hint,
-                              exclude_self_ids=ids, point_ids=ids)
+    qg, pg, dg = ct.knn_descend(tree, X, X, 7, init_bound=hint,
+                                exclude_self_ids=ids, point_ids=ids)
     order = np.lexsort((pg, dg, qg))
     eq, ep, ed = brute_knn(X, X, 7, exclude_self_idx=ids)
     assert np.array_equal(qg[order], eq)
@@ -107,7 +107,7 @@ def test_knn_with_radius_hint_exact():
 def test_knn_k_exceeds_n():
     X = make_blobs(20, 3, 2, seed=6)
     tree = ct.build(X)
-    qg, pg, dg = ct.knn_query(tree, X, X[:5], 50)
+    qg, pg, dg = ct.knn_descend(tree, X, X[:5], 50)
     # every query returns all 20 points
     assert np.all(np.bincount(qg, minlength=5) == 20)
 

@@ -6,8 +6,7 @@ parameter of that function, so a deletion here cannot silently break
 the benchmark.
 (b) Every module under ``covertree_spark/`` is imported, directly or
 transitively, by one of the system's entry points, so unreached code
-cannot grow back. The modules in ``KNOWN_UNREACHED`` predate the check:
-only their tests import them. The list may only shrink.
+cannot grow back.
 """
 
 import ast
@@ -21,12 +20,6 @@ ROOTS = (
     "covertree_spark/core/invariants.py",
     "__spark_entry__.py",
 )
-KNOWN_UNREACHED = frozenset({
-    "covertree_spark.functions.multimodal",
-    "covertree_spark.streaming",
-    "covertree_spark.streaming.ingest",
-    "covertree_spark.streaming.query",
-})
 
 
 def _path_of(module: str) -> str | None:
@@ -196,7 +189,5 @@ def test_every_module_is_reachable():
         for f in files
         if f.endswith(".py")
     }
-    unreached = sorted(on_disk - seen - KNOWN_UNREACHED)
+    unreached = sorted(on_disk - seen)
     assert not unreached, unreached
-    stale = sorted(KNOWN_UNREACHED - (on_disk - seen))
-    assert not stale, f"reached or deleted, drop from KNOWN_UNREACHED: {stale}"

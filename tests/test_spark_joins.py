@@ -225,15 +225,36 @@ def test_threshold_clearance(spark, geo_points, emb_points):
         assert gap > 1e-9, f"distance within {gap} of radius {r}"
 
 
-def test_knn_distinct_query_table(spark, geo_points, geo_numpy):
+@pytest.mark.parametrize("path", ["transient", "index", "chain"])
+def test_knn_distinct_query_table(spark, geo_points, geo_numpy, path):
     """Non-self-query kNN: a separate query table against the build
     side — first-class in the reference (systolic query blocks vs the
     local tree, src/dist_point_vector.cpp:250-273). No self-exclusion:
-    a query that coincides with a build point finds it at dist 0."""
+    a query that coincides with a build point finds it at dist 0.
+
+    Three read paths: the transient join, a persisted index
+    (``self_join=False`` is what index serving runs), and a two-
+    generation chain whose newer generation re-holds the even cells,
+    so those cells must be answered from it alone."""
+    from covertree_spark.operators.index import build_trees, stats_from_trees
+    from covertree_spark.operators.knn import knn_over_index, knn_over_index_chain
+
     X, ids = geo_numpy
     k = 7
     qdf = geo_points.filter(F.col("id") % 5 == 0).select("id", "vec")
-    got = knn_self_join(geo_points, k=k, d=3, queries=qdf)
+    if path == "transient":
+        got = knn_self_join(geo_points, k=k, d=3, queries=qdf)
+    elif path == "index":
+        trees = build_trees(geo_points, d=3).persist()
+        got = knn_over_index(
+            trees, qdf, k=k, d=3, self_join=False, stats=stats_from_trees(trees)
+        )
+    else:
+        gens = [
+            build_trees(geo_points, d=3).persist(),
+            build_trees(geo_points.filter(F.col("cell") % 2 == 0), d=3).persist(),
+        ]
+        got = knn_over_index_chain(gens, qdf, k=k, d=3, self_join=False)
     rows = sorted(
         (r["src"], r["rank"], r["dst"])
         for r in got.select("src", "rank", "dst").collect()
