@@ -9,8 +9,9 @@ Physical plan (the reference's cvor pipeline re-expressed,
 
   points(id, vec, cell)                [aligned: partition.align]
     -> cell_stats (2 JVM aggs)          [broadcast]
-    -> replicate_ghosts (mapInPandas)   [one row per foreign candidate cell]
-    -> ghosts cogroup homes on cell     [only the ghost side is shuffled;
+    -> partition.route(radius=r)        [mapInPandas: one ghost row per
+                                         foreign candidate cell]
+    -> partition.cell_cogroup on cell   [only the ghost side is shuffled;
                                          homes are read in place]
          per cell: build cover tree over home points,
                    batched radius query for home+ghost rows
@@ -28,10 +29,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import covertree as ct
-from ..plans.metrics import counted_fn, counted_stream
+from ..plans.metrics import counted_stream
 from ..plans.session import mark_releasable
 from ..sources.tables import vec_matrix
-from .partition import CellStats, cell_stats, replicate_ghosts
+from .partition import CellStats, cell_cogroup, cell_stats, route
 
 EDGE_SCHEMA = "src bigint, dst bigint, dist double"
 
@@ -59,27 +60,13 @@ def ball_self_join(
     Caching contract: with ``stats=None`` the input is persisted and
     registered releasable (see knn_self_join docstring); passing
     precomputed stats skips both."""
-    spark = points.sparkSession
     if stats is None:
         # scanned by stats (2x), ghosts, homes
         points = mark_releasable(points.persist())
         stats = cell_stats(points, d, fine_col=fine_col)
-    stats_bc = spark.sparkContext.broadcast(stats)
-    ghosts = replicate_ghosts(points, stats_bc, radius)
-    home_g = points.select("cell", "id", "vec")
 
-    def per_cell(ghost_pdf: pd.DataFrame, home_pdf: pd.DataFrame) -> pd.DataFrame:
-        if home_pdf.empty:
-            return pd.DataFrame({"src": [], "dst": [], "dist": []}).astype(
-                {"src": "int64", "dst": "int64", "dist": "float64"}
-            )
-        H = vec_matrix(home_pdf)
-        hid = home_pdf["id"].to_numpy()
-        if ghost_pdf.empty:
-            Q, qid = H, hid
-        else:
-            Q = np.concatenate([H, vec_matrix(ghost_pdf)])
-            qid = np.concatenate([hid, ghost_pdf["id"].to_numpy()])
+    def kernel(ghosts: pd.DataFrame, H: np.ndarray, hid: np.ndarray, tree_fn):
+        Q, qid = _with_ghosts(ghosts, H, hid)
         if len(H) <= brute_cutoff:
             # small build side: a BLAS matrix pass beats tree descent
             # (and in high-d with r near the distance concentration the
@@ -88,17 +75,29 @@ def ball_self_join(
             qi, pi = np.nonzero(d2 <= radius * radius)
             di = np.sqrt(d2[qi, pi])
         else:
-            tree = ct.build(H, cover=cover, leaf_size=leaf_size)
-            qi, pi, di = ct.radius_query(tree, H, Q, radius)
+            qi, pi, di = ct.radius_query(tree_fn(), H, Q, radius)
         src = qid[qi]
         dst = hid[pi]
         keep = src != dst
         return pd.DataFrame({"src": src[keep], "dst": dst[keep], "dist": di[keep]})
 
+    # rq is the same r on every ghost row: project it away before the
+    # shuffle
+    ghosts = route(points, stats, radius=radius).drop("rq")
+    return cell_cogroup(
+        ghosts, points, kernel, EDGE_SCHEMA,
+        build=lambda H: ct.build(H, cover=cover, leaf_size=leaf_size),
+    )
+
+
+def _with_ghosts(ghosts: pd.DataFrame, H: np.ndarray, hid: np.ndarray):
+    """(Q, qid): a cell's home block followed by its ghost rows — the
+    query side of the ε kernels."""
+    if ghosts.empty:
+        return H, hid
     return (
-        ghosts.groupby("cell")
-        .cogroup(home_g.groupby("cell"))
-        .applyInPandas(counted_fn(per_cell), schema=EDGE_SCHEMA)
+        np.concatenate([H, vec_matrix(ghosts)]),
+        np.concatenate([hid, ghosts["id"].to_numpy()]),
     )
 
 
@@ -145,47 +144,25 @@ def ball_self_join_bin_counts(
 
     Returns a 1-row DataFrame (c0..c{m-1} bigint) of global counts
     (0 when a bin is empty)."""
-    spark = points.sparkSession
     if stats is None:
         points = mark_releasable(points.persist())
         stats = cell_stats(points, d)
-    stats_bc = spark.sparkContext.broadcast(stats)
     radii = [float(r) for r in radii]
     rmax = radii[-1]
     m = len(radii)
     gsrc = points
     if src_mod2 is not None:
         gsrc = points.where(F.pmod(F.col("id"), F.lit(2)) == int(src_mod2))
-    ghosts = replicate_ghosts(gsrc, stats_bc, rmax)
-    home_g = points.select("cell", "id", "vec")
     schema = ", ".join(f"c{i} bigint" for i in range(m))
 
-    def zeros_row() -> pd.DataFrame:
-        return pd.DataFrame(
-            {f"c{i}": pd.Series([0], dtype="int64") for i in range(m)}
-        )
-
-    def per_cell_counts(
-        ghost_pdf: pd.DataFrame, home_pdf: pd.DataFrame
-    ) -> pd.DataFrame:
-        if home_pdf.empty:
-            return zeros_row()
-        H = vec_matrix(home_pdf)
-        hid = home_pdf["id"].to_numpy()
-        if ghost_pdf.empty:
-            Q, qid = H, hid
-        else:
-            G = vec_matrix(ghost_pdf)
-            Q = np.concatenate([H, G])
-            qid = np.concatenate([hid, ghost_pdf["id"].to_numpy()])
+    def kernel(ghosts: pd.DataFrame, H: np.ndarray, hid: np.ndarray, _tree_fn):
+        Q, qid = _with_ghosts(ghosts, H, hid)
         if src_mod2 is not None:
             kq = (qid % 2) == src_mod2
             Q, qid = Q[kq], qid[kq]
         if dst_mod2 is not None:
             kh = (hid % 2) == dst_mod2
             H, hid = H[kh], hid[kh]
-        if not len(H) or not len(Q):
-            return zeros_row()
         counts = np.zeros(m, np.int64)
         r2max = rmax * rmax
         for s in range(0, len(Q), chunk_rows):
@@ -209,11 +186,8 @@ def ball_self_join_bin_counts(
             {f"c{i}": pd.Series([counts[i]], dtype="int64") for i in range(m)}
         )
 
-    per_cell_rows = (
-        ghosts.groupby("cell")
-        .cogroup(home_g.groupby("cell"))
-        .applyInPandas(counted_fn(per_cell_counts), schema=schema)
-    )
+    ghosts = route(gsrc, stats, radius=rmax).drop("rq")
+    per_cell_rows = cell_cogroup(ghosts, points, kernel, schema)
     return per_cell_rows.agg(
         *[F.sum(f"c{i}").cast("bigint").alias(f"c{i}") for i in range(m)]
     )

@@ -1,5 +1,5 @@
-"""Global partitioning: cell assignment, per-cell statistics, ghost
-replication, Voronoi centers, hot-cell splitting.
+"""Global partitioning: cell assignment, per-cell statistics, routing
+to cells, the per-cell cogroup, Voronoi centers, hot-cell splitting.
 
 Replaces the reference's rank decomposition pipeline
 (/root/reference/src/dist_point_vector.cpp:455-832) with DataFrame
@@ -14,16 +14,20 @@ stages:
                            (replaces LPT assignment + work stealing,
                            reference O3/O6)
   * ``cell_stats``       — per-cell (count, centroid, circumradius),
-                           broadcast; the triangle-inequality bounds
-                           ``|d(q,centroid)| ± circumradius`` drive both
-                           ghost replication and kNN cell pruning —
-                           valid in ANY metric space, so geo cells and
-                           Voronoi cells share one code path
-  * ``replicate_ghosts`` — boundary replication: point p copies to
-                           every cell whose lower bound <= r
-                           (reference O2 ghost rule, :565-625,
-                           generalized from "dist to center + 2r" to
-                           the exact per-cell bound)
+                           broadcast; the triangle-inequality bound
+                           ``d(q,centroid) - circumradius`` drives
+                           routing — valid in ANY metric space, so geo
+                           cells and Voronoi cells share one code path
+  * ``route``            — the filter: each row goes to every cell
+                           within its radius rq — a fixed r (ghost
+                           replication, reference O2 ghost rule,
+                           :565-625, generalized from "dist to center
+                           + 2r" to the exact per-cell bound) or an
+                           upper bound on its k-th distance (kNN cell
+                           cover)
+  * ``cell_cogroup``     — the verify: routed rows meet each cell's
+                           home block or persisted tree, and one
+                           kernel runs per cell (reference :962-996)
   * ``adaptive_voronoi_k`` / ``adaptive_geo_res`` — cell counts sized
                            from the row count and the parallelism
   * ``align``            — the one ingest shuffle: persist points
@@ -45,8 +49,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import cells as cellcodec
-from ..plans.metrics import counted_stream
+from ..plans.metrics import counted_fn, counted_stream
 from ..sources.tables import vec_matrix
+from .index import tree_from_row
 
 
 @dataclass
@@ -72,10 +77,6 @@ class CellStats:
     coarse_counts: np.ndarray | None = None  # (G,)
     coarse_members: list | None = None  # G lists of entry indices
 
-    @property
-    def partition_cells(self) -> np.ndarray:
-        return np.unique(self.cell_ids)
-
     def with_hierarchy(self, n_coarse: int = 64) -> "CellStats":
         """Derive a coarse pruning level ON THE DRIVER from the fine
         entries (no extra Spark pass): Gonzalez-group the entry
@@ -83,7 +84,7 @@ class CellStats:
         count-weighted member mean and its circumradius is
         ``max(d(group_centroid, member_centroid) + member_circ)`` — a
         valid bound for every point of every member. Hierarchical
-        phase-1 pruning then costs O(nq x G) + O(nq x surviving fine)
+        routing (``route``) then costs O(nq x G) + O(nq x surviving fine)
         instead of O(nq x C)."""
         cents = self.centroids
         G = min(n_coarse, len(cents))
@@ -116,20 +117,6 @@ class CellStats:
             coarse_counts=gcount,
             coarse_members=members,
         )
-
-    def lower_bounds(self, Q: np.ndarray) -> np.ndarray:
-        """(nq, C) lower bound on d(q, any point of cell c)."""
-        from ..core.covertree import pairwise_sq_dists
-
-        d = np.sqrt(pairwise_sq_dists(Q, self.centroids))
-        return np.maximum(d - self.circumradii[None, :], 0.0)
-
-    def upper_bounds(self, Q: np.ndarray) -> np.ndarray:
-        """(nq, C) upper bound on d(q, every point of cell c)."""
-        from ..core.covertree import pairwise_sq_dists
-
-        d = np.sqrt(pairwise_sq_dists(Q, self.centroids))
-        return d + self.circumradii[None, :]
 
 
 def assign_cells(points: DataFrame, res: int, lon_col="lon", lat_col="lat") -> DataFrame:
@@ -446,59 +433,214 @@ def cell_stats(
     )
 
 
-def replicate_ghosts(points: DataFrame, stats_bc, radius: float) -> DataFrame:
-    """Boundary replication: emit one (cell, id, vec) ghost row per
-    foreign cell whose lower bound <= radius. Home rows are not
-    emitted: the ball join reads them in place from the partitioned
-    input. Exactness: if d(p,q) <= r and q is home in cell c, then
-    lb_c(p) <= d(p,q) <= r, so p is replicated into c (reference ghost
-    guarantee, dist_point_vector.cpp:583-596, with the tighter
-    centroid/circumradius bound)."""
+# (cell, id, vec, rq): vec is NULL on a k-mode row sent to its home
+# cell (see routed_matrix); rq is the radius the row was routed with.
+ROUTE_SCHEMA = "cell bigint, id bigint, vec array<float>, rq double"
 
-    def dilate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+# Relative slack on every routing radius: bounds carry float noise that
+# can put a true neighbour exactly AT the bound, so routing must be a
+# strict superset (the per-cell kernels re-filter exactly).
+_SLACK = 1.0 + 1e-9
+
+
+def route(
+    points: DataFrame, stats: CellStats, radius: float | None = None,
+    k: int | None = None,
+) -> DataFrame:
+    """The filter of filter-then-verify: send each row of ``points``
+    (id, vec[, cell]) to every partition cell holding a stats entry c
+    with d(p, centroid_c) <= rq + circ_c -> ROUTE_SCHEMA rows. Exactly
+    one of:
+
+      * ``radius=r``: rq = r. Ghost replication, the reference's O2
+        ghost rule (dist_point_vector.cpp:565-625) generalized from
+        "dist to center + 2r" to the per-entry ball bound.
+      * ``k=n``: rq = ``_covering_ub``, an upper bound on the row's
+        n-th nearest distance. The kNN cell cover.
+
+    Exact: a point within rq of p that lives in entry c puts p inside
+    that ball (triangle inequality). Per cache-sized chunk, one GEMM
+    against the centroids tests d2 <= (rq + circ)^2 with rq carrying
+    ``_SLACK``, and entries of one partition cell collapse to one row.
+    Above 128 entries a coarse level (``CellStats.with_hierarchy``)
+    prunes first.
+
+    Home rule, for rows that carry their ``cell``: with ``radius`` the
+    row is not sent home (the ε kernel queries the whole home block);
+    with ``k`` it is sent home with a NULL vec, which ``routed_matrix``
+    restores (most kNN rows target their home cell on clustered data,
+    so the shuffle carries O(foreign rows x d))."""
+    if (radius is None) == (k is None):
+        raise ValueError("route takes exactly one of radius= and k=")
+    if len(stats.cell_ids) > 128 and stats.coarse_of is None:
+        stats = stats.with_hierarchy(n_coarse=64)
+    stats_bc = points.sparkSession.sparkContext.broadcast(stats)
+    cols = ["id", "vec"] + (["cell"] if "cell" in points.columns else [])
+
+    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         st: CellStats = stats_bc.value
-        coarse = st.cell_ids
-        stride = int(coarse.max()) + 1 if len(coarse) else 1
-        # cache-resident (points x entries) working matrices (~2MB);
-        # see knn.phase1 for rationale
-        chunk = max(64, (1 << 21) // (8 * max(1, len(coarse))))
+        # keep the (rows x entries) working matrices CACHE-RESIDENT
+        # (~2MB): on shared-bandwidth hosts, streaming matrices through
+        # memory serializes all workers; cache-sized blocks scale.
+        chunk = max(64, (1 << 21) // (8 * max(1, len(st.cell_ids))))
         for whole in batches:
-            if whole.empty:
-                continue
             for s in range(0, len(whole), chunk):
-                pdf = whole.iloc[s : s + chunk]
-                yield from _dilate_chunk(st, coarse, stride, pdf)
+                out = _route_chunk(st, whole.iloc[s : s + chunk], radius, k)
+                if len(out):
+                    yield out
 
-    def _dilate_chunk(st, coarse, stride, pdf):
-            from ..core.covertree import pairwise_sq_dists
+    return points.select(*cols).mapInPandas(
+        counted_stream(emit, emit_bytes=True), schema=ROUTE_SCHEMA
+    )
 
-            X = vec_matrix(pdf)
-            home = pdf["cell"].to_numpy()
-            # lb <= r  <=>  d2 <= (r + circ)^2 : one GEMM + one compare,
-            # no sqrt pass over the big matrix (memory-bandwidth-bound).
-            # 1e-9 relative slack: bounds carry float noise; replication
-            # must be a superset (the per-cell query re-filters exactly).
-            d2 = pairwise_sq_dists(X, st.centroids)
-            thr = radius * (1.0 + 1e-9) + st.circumradii
-            cand = (d2 <= (thr * thr)[None, :]) & (coarse[None, :] != home[:, None])
-            pi, ej = np.nonzero(cand)
-            if len(pi):
-                # dedupe (point, partition-cell): several fine entries
-                # may map to the same coarse cell
-                key = pi.astype(np.int64) * stride + coarse[ej]
-                uk = np.unique(key)
-                pi2 = uk // stride
-                yield pd.DataFrame(
-                    {
-                        "cell": uk % stride,
-                        "id": pdf["id"].to_numpy()[pi2],
-                        "vec": pdf["vec"].to_numpy()[pi2],
-                    }
-                )
 
-    schema = "cell bigint, id bigint, vec array<float>"
-    return points.mapInPandas(
-        counted_stream(dilate, emit_bytes=True), schema=schema
+def _route_chunk(st: CellStats, pdf: pd.DataFrame, radius, k) -> pd.DataFrame:
+    from ..core.covertree import pairwise_sq_dists
+
+    X = vec_matrix(pdf)
+    circ = st.circumradii
+    goal = None if k is None else min(k, int(st.counts.sum()))
+    flat = st.coarse_of is None
+    # first level: the entries themselves, or their coarse groups
+    counts1, circ1 = (
+        (st.counts, circ) if flat else (st.coarse_counts, st.coarse_circumradii)
+    )
+    d2 = pairwise_sq_dists(X, st.centroids if flat else st.coarse_centroids)
+    rq = (
+        np.full(len(X), radius * _SLACK) if k is None
+        else _covering_ub(d2, counts1, circ1, k, goal) * _SLACK
+    )
+    ent, valid = np.arange(len(circ)), True
+    if not flat:
+        # entries of the surviving coarse groups only:
+        # O(n x G) + O(n x surviving entries) instead of O(n x C)
+        thrc = rq[:, None] + circ1[None, :]
+        surv = d2 <= thrc * thrc
+        ent = np.concatenate(
+            [np.empty(0, np.int64)]
+            + [st.coarse_members[g] for g in np.flatnonzero(surv.any(axis=0))]
+        )
+        d2 = pairwise_sq_dists(X, st.centroids[ent])
+        valid = surv[:, st.coarse_of[ent]]
+        if k is not None:
+            # both bounds are valid; an inf prefix entry (under-covered
+            # mask) degrades gracefully to the coarse bound
+            ubf = _covering_ub(
+                np.where(valid, d2, np.inf), st.counts[ent], circ[ent], k, goal
+            )
+            rq = np.minimum(ubf, rq) * _SLACK
+    thr = rq[:, None] + circ[ent][None, :]
+    pi, ej = np.nonzero(valid & (d2 <= thr * thr))
+    # dedupe (row, partition cell): several entries share one cell
+    cells = st.cell_ids
+    stride = int(cells.max()) + 1 if len(cells) else 1
+    uk = np.unique(pi.astype(np.int64) * stride + cells[ent[ej]])
+    ri, tgt = uk // stride, uk % stride
+    vecs = pdf["vec"].to_numpy()[ri]
+    if "cell" in pdf.columns:
+        home = tgt == pdf["cell"].to_numpy()[ri]
+        if k is None:
+            ri, tgt, vecs = ri[~home], tgt[~home], vecs[~home]
+        else:
+            vecs[home] = None
+    return pd.DataFrame(
+        {"cell": tgt, "id": pdf["id"].to_numpy()[ri], "vec": vecs, "rq": rq[ri]}
+    )
+
+
+def _covering_ub(d2, counts, circs, need: int, goal: int) -> np.ndarray:
+    """Upper bound on the need-th distance from a covering set:
+    entries in d2 order until their counts reach ``goal``;
+    ub = max over that prefix of dist-to-centroid + circ.
+    (Any covering set yields a VALID bound; d2 order is a
+    cheap proxy for lower-bound order.)"""
+    E2 = d2.shape[1]
+    m = min(E2, max(8, 4 * max(1, need // max(1, int(counts.min())))))
+    while True:
+        part = (
+            np.argpartition(d2, m - 1, axis=1)[:, :m] if m < E2
+            else np.broadcast_to(np.arange(E2), d2.shape).copy()
+        )
+        d2_part = np.take_along_axis(d2, part, axis=1)
+        ord2 = np.argsort(d2_part, axis=1, kind="stable")
+        sorted_idx = np.take_along_axis(part, ord2, axis=1)
+        cum = np.cumsum(counts[sorted_idx], axis=1)
+        reach = cum >= goal
+        if bool(reach.any(axis=1).all()) or m >= E2:
+            break
+        m = min(E2, m * 4)
+    cut = reach.argmax(axis=1)
+    cut = np.where(reach.any(axis=1), cut, m - 1)
+    prefix_mask = np.arange(m)[None, :] <= cut[:, None]
+    dc_sel = np.sqrt(np.take_along_axis(d2_part, ord2, axis=1))
+    ub_sel = dc_sel + circs[sorted_idx]
+    return np.where(prefix_mask, ub_sel, -np.inf).max(axis=1)
+
+
+def routed_matrix(rows: pd.DataFrame, H: np.ndarray, hid: np.ndarray) -> np.ndarray:
+    """Query matrix of a routed block, restoring VEC-ELIDED rows (the
+    k-mode home rule of ``route``) from the home block (H, hid) by one
+    argsort + searchsorted on the ids. The MEMBERSHIP CHECK makes a
+    caller that breaks the elision contract (e.g. a stale 'cell'
+    column against a mismatched index) fail loudly instead of silently
+    restoring a wrong vector."""
+    vals = rows["vec"].to_numpy()
+    miss = np.fromiter((v is None for v in vals), dtype=bool, count=len(vals))
+    if not miss.any():
+        return vec_matrix(rows)
+    Q = np.empty((len(vals), H.shape[1]), dtype=np.float64)
+    if (~miss).any():
+        Q[~miss] = np.stack(vals[~miss]).astype(np.float64)
+    qid = rows["id"].to_numpy()[miss]
+    order = np.argsort(hid, kind="stable")
+    pos = np.searchsorted(hid, qid, sorter=order)
+    inb = pos < len(hid)
+    hit = order[np.where(inb, pos, 0)]
+    found = inb & (hid[hit] == qid)
+    if not bool(found.all()):
+        missing = qid[~found][:5]
+        raise KeyError(
+            "vec-elided query ids absent from their home block "
+            f"(elision contract violated; e.g. {missing.tolist()}): "
+            "the queries' 'cell' column does not match the layout this "
+            "home/index block was built from"
+        )
+    Q[miss] = H[hit]
+    return Q
+
+
+def cell_cogroup(
+    routed: DataFrame, blocks: DataFrame, kernel, schema: str, build=None
+) -> DataFrame:
+    """Cogroup ``routed`` rows with per-cell ``blocks`` on ``cell`` and
+    run ``kernel(rows, H, hid, tree_fn)`` once per cell -> ``schema``
+    rows. This is the verify half of ``route``'s filter-then-verify.
+
+    ``blocks`` is either home rows (cell, id, vec), decoded to the
+    point block H with ids hid and a lazy ``tree_fn() = build(H)``, or
+    a persisted index (``index.TREE_SCHEMA``, one row per cell),
+    decoded by ``index.tree_from_row``. A cell without a block yields
+    no rows; ``rows`` may be empty (a block no row was routed to).
+
+    On the aligned layout (``align``) EnsureRequirements elides the
+    block-side Exchange, so only the routed rows move."""
+    trees = "childarr" in blocks.columns
+    if not trees:
+        blocks = blocks.select("cell", "id", "vec")
+
+    def per_cell(rows: pd.DataFrame, block: pd.DataFrame) -> pd.DataFrame:
+        if block.empty:
+            return pd.DataFrame()
+        if trees:
+            tree, H, hid = tree_from_row(block.iloc[0])
+            return kernel(rows, H, hid, lambda: tree)
+        H = vec_matrix(block)
+        return kernel(rows, H, block["id"].to_numpy(), lambda: build(H))
+
+    return (
+        routed.groupby("cell")
+        .cogroup(blocks.groupby("cell"))
+        .applyInPandas(counted_fn(per_cell), schema=schema)
     )
 
 

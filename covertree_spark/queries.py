@@ -212,8 +212,6 @@ def _checkpointed_layout(spark, table: str, params: dict, build_fn, d: int):
             stats_table,
             snap,
         )
-    if len(stats.cell_ids) > 128 and stats.coarse_of is None:
-        stats = stats.with_hierarchy(n_coarse=64)
     return pts, stats, snap
 
 

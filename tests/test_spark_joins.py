@@ -51,9 +51,21 @@ def _layout(geo_points, layout):
     return geo_points.coalesce(1)
 
 
-def test_geo_ball_join_matches_bruteforce(spark, geo_points, geo_numpy):
+@pytest.mark.parametrize("stats", [None, "fine"])
+def test_geo_ball_join_matches_bruteforce(spark, geo_points, geo_numpy, stats):
+    """``fine``: stats entries are res-5 cells inside the res-3
+    partition cells, more than 128 of them, so ``partition.route``
+    prunes through its coarse level first; every edge must survive."""
     X, ids = geo_numpy
-    got = edges_set(ball_self_join(geo_points, GEO_R, d=3))
+    st = None
+    if stats == "fine":
+        ll = pt.assign_cells(src.doc_points_lonlat(spark, SF_TINY), res=5)
+        fine = geo_points.join(
+            ll.select("id", F.col("cell").alias("cell_fine")), "id"
+        )
+        st = pt.cell_stats(fine, 3, fine_col="cell_fine")
+        assert len(st.cell_ids) > 128
+    got = edges_set(ball_self_join(geo_points, GEO_R, d=3, stats=st))
     exp = brute_ball_edges(X, GEO_R)
     expected = sorted((int(ids[s]), int(ids[t])) for s, t in exp)
     assert len(got) > 0
@@ -423,8 +435,6 @@ def test_geo_knn_merge_mode_parity(spark, k):
     points, 10 apart, one cell each. At k=1 every query's candidates
     are its own cell; at k=40 no query fits in one cell. (Geo cells
     are adjacent, so no geo query has a single candidate cell.)"""
-    from covertree_spark.operators.knn import _candidates
-
     rng = np.random.default_rng(5)
     grid = np.stack(np.meshgrid(range(4), range(2), range(2)), -1).reshape(-1, 3)
     cell = np.repeat(np.arange(16), 25)
@@ -434,7 +444,7 @@ def test_geo_knn_merge_mode_parity(spark, k):
         [(int(i), X[i].tolist(), int(cell[i])) for i in ids],
         "id bigint, vec array<float>, cell bigint",
     )
-    ncand = _candidates(pts, pt.cell_stats(pts, 3), k, True).groupBy("qid").count()
+    ncand = pt.route(pts, pt.cell_stats(pts, 3), k=k + 1).groupBy("id").count()
     single = ncand.filter(F.col("count") == 1).count()
     assert single == (len(ids) if k == 1 else 0)
 
