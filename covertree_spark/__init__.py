@@ -15,6 +15,9 @@ __version__ = "0.1.0"
 # behavior is pathological on virtualized hosts. Safe no-op elsewhere;
 # opt out with COVERTREE_NO_MALLOC_TUNE=1.
 from covertree_spark.plans.hostmem import apply_malloc_reuse as _amr
+# No zip-directory re-read per Python task (plans/zipcache.py).
+from covertree_spark.plans.zipcache import apply_zip_directory_reuse as _azr
 
 _amr()
-del _amr
+_azr()
+del _amr, _azr

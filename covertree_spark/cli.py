@@ -54,11 +54,16 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("-v", dest="verbosity", type=int, default=1)
     p.add_argument("-o", dest="outfile", default=None)
     p.add_argument("-A", dest="tree_assignment", default="multiway",
-                   choices=["static", "multiway"])
+                   choices=["static", "multiway"],
+                   help="reference tree assignment; only echoed into the stats")
     p.add_argument("-B", dest="query_balancing", default="static",
-                   choices=["static", "steal"])
+                   choices=["static", "steal"],
+                   help="reference query balancing; only echoed into the stats")
     p.add_argument("-M", dest="method", default="cvor",
-                   choices=["bf", "ct", "ctrma", "cvor", "gvor"])
+                   choices=["bf", "ct", "ctrma", "cvor", "gvor"],
+                   help="bf: brute-force scan join; ct|ctrma|cvor|gvor all "
+                        "run the same cvor plan (Voronoi cells, ghost "
+                        "shuffle, per-cell cover trees)")
     p.add_argument("-j", dest="stats_file", default=None)
     p.add_argument("-F", dest="fix_num_centers", action="store_true")
     p.add_argument("-h", action="help")

@@ -18,11 +18,15 @@ from pyspark.sql import SparkSession
 def _package_zip() -> str:
     """Zip the covertree_spark package for worker distribution — the
     same artifact ``spark-submit --py-files`` would ship (north_rule
-    deployment mode). Cached per process."""
+    deployment mode). Written to a temp file and renamed into place, so
+    a session starting concurrently in the same TMPDIR never ships a
+    half-written archive."""
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     root = os.path.dirname(pkg_dir)
     out = os.path.join(tempfile.gettempdir(), "covertree_spark_pyfiles.zip")
-    with zipfile.ZipFile(out, "w") as z:
+    fd, tmp = tempfile.mkstemp(suffix=".zip.tmp", dir=os.path.dirname(out))
+    os.close(fd)
+    with zipfile.ZipFile(tmp, "w") as z:
         for dirpath, _dirnames, filenames in os.walk(pkg_dir):
             if "__pycache__" in dirpath:
                 continue
@@ -30,6 +34,7 @@ def _package_zip() -> str:
                 if f.endswith(".py"):
                     full = os.path.join(dirpath, f)
                     z.write(full, os.path.relpath(full, root))
+    os.replace(tmp, out)
     return out
 
 

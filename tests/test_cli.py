@@ -59,3 +59,9 @@ def test_cover_and_centers_flags_change_plan_not_result(spark, fvecs):
     b = cli.run(["-i", fvecs, "-r", "2.0", "-M", "gvor"], spark=spark)
     assert a["num_edges"] == b["num_edges"]
     assert a["parameters"]["num_centers"] == 4  # -F honored
+
+
+def test_help_describes_method_and_echoed_flags():
+    text = " ".join(cli.build_parser().format_help().split())
+    assert "ct|ctrma|cvor|gvor all run the same cvor plan" in text
+    assert text.count("only echoed into the stats") == 2
