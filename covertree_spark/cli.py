@@ -86,7 +86,7 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         voronoi_centers,
     )
     from .plans import metrics as M
-    from .plans.session import get_spark, release_intermediates
+    from .plans.session import get_spark, mark_releasable, release_intermediates
     from .sources import vecfiles
 
     if spark is None:
@@ -131,7 +131,10 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         edges = ball_self_join(
             pts, args.radius, d=d, cover=args.cover, leaf_size=args.leaf_size
         )
-    summary = edge_summary(edges.select("src", "dst"), n)
+    # the count materializes the persisted edge set, so the -o sink
+    # below reads it instead of running the whole join a second time
+    edges = mark_releasable(edges.select("src", "dst").persist())
+    summary = edge_summary(edges, n)
     runtime = time.time() - t0
 
     e = summary["num_edges_with_self_loops"]
@@ -148,9 +151,9 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     if args.outfile:
         t0 = time.time()
         if args.outfile.endswith(".parquet"):
-            write_edges(edges.select("src", "dst"), args.outfile, n)
+            write_edges(edges, args.outfile, n)
         else:
-            write_edge_file(edges.select("src", "dst"), n, args.outfile)
+            write_edge_file(edges, n, args.outfile)
         if args.verbosity >= 1:
             print(f"[v1,time={time.time() - t0:.3f}] wrote edges to "
                   f"file '{args.outfile}'")

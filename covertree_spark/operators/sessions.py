@@ -36,8 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# DATA-ADAPTIVE dial (r6, the components.py / graph_iter.py small-path
-# discipline applied to the session family): the two-phase plan exists
+# DATA-ADAPTIVE dial (r6, the components.py small-path discipline
+# applied to the session family): the two-phase plan exists
 # to BOUND the largest task by the largest (user, time-bucket) group.
 # When the WHOLE input is at most this many rows, the classic
 # one-window plan's largest task is bounded by the same number — the

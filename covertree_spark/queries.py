@@ -2097,183 +2097,6 @@ def sql_geo_components():
     )
 
 
-def q_geo_triangles(spark, sf_dir):
-    """Per-vertex TRIANGLE counts of the epsilon-graph at GEO_CC_R —
-    the local-clustering-coefficient numerator, via the degree-ordered
-    orientation (operators/graph_metrics.py): wedges enumerate only
-    from out-neighborhoods whose size the ordering caps at O(sqrt(m)),
-    so a hot spatial cell's hub vertex never owns a quadratic key.
-    Integer-exact; zeros included via the id universe."""
-    from .operators.graph_metrics import triangle_counts
-
-    pts, stats = _geo_points(spark, sf_dir)
-    edges = ball_self_join(pts, GEO_CC_R, d=3, stats=stats).select("src", "dst")
-    return triangle_counts(edges, nodes=pts)
-
-
-def sql_geo_triangles():
-    """DuckDB oracle: the x<y<z closed-wedge definition, one row per
-    triangle, unpivoted to vertices and counted."""
-    return (
-        _PTS_CTE
-        + ", e AS (SELECT a.id AS src, b.id AS dst FROM xyz a JOIN xyz b ON a.id < b.id "
-        "WHERE sqrt(((a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)) + (a.z-b.z)*(a.z-b.z)) "
-        f"<= {GEO_CC_R!r}), "
-        "tri AS (SELECT p.src AS x, p.dst AS y, q.dst AS z FROM e p "
-        "JOIN e q ON q.src = p.dst JOIN e r ON r.src = p.src AND r.dst = q.dst), "
-        "v AS (SELECT x AS id FROM tri UNION ALL SELECT y FROM tri "
-        "UNION ALL SELECT z FROM tri) "
-        "SELECT pt.id, CAST(coalesce(t.c, 0) AS BIGINT) AS triangles "
-        "FROM xyz pt LEFT JOIN (SELECT id, count(*) AS c FROM v GROUP BY id) t "
-        "USING (id)"
-    )
-
-
-def q_geo_bfs_hops(spark, sf_dir):
-    """Exact BFS hop distances over the epsilon-graph, from a
-    deterministic data-derived source: the min-id vertex of the
-    LARGEST component (ties to the smaller component label — which IS
-    its min id), so the fixture exercises real multi-level expansion
-    instead of a singleton source. Synchronous frontier joins with
-    per-level lineage truncation (operators/graph_metrics.py);
-    unreached vertices report -1. Level count is bounded by the
-    GEOMETRIC diameter O(extent/eps), not by n — the property that
-    makes BFS over an epsilon-graph tractable at 10^12 rows."""
-    from .operators.components import connected_components
-    from .operators.graph_metrics import bfs_hops
-    from .plans.session import mark_releasable
-
-    pts, stats = _geo_points(spark, sf_dir)
-    edges = mark_releasable(
-        ball_self_join(pts, GEO_CC_R, d=3, stats=stats)
-        .select("src", "dst")
-        .persist()
-    )
-    comp = connected_components(edges, nodes=pts)
-    pick = (
-        comp.groupBy("component")
-        .agg(F.count("*").alias("c"))
-        .agg(F.min(F.struct((-F.col("c")).alias("nc"), "component")).alias("m"))
-        .select(F.col("m.component"))
-        .collect()[0][0]
-    )
-    return bfs_hops(edges, source=int(pick), nodes=pts)
-
-
-def sql_geo_bfs_hops(hop_cap: int = 200):
-    """DuckDB oracle: component closure -> largest component's label
-    as the source -> recursive hop expansion (UNION-dedup, capped well
-    above the fixture diameter) -> min hop per node, -1 unreached."""
-    cte = _PTS_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
-    return (
-        cte
-        + ", e AS (SELECT a.id AS src, b.id AS dst FROM xyz a JOIN xyz b ON a.id <> b.id "
-        "WHERE sqrt(((a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)) + (a.z-b.z)*(a.z-b.z)) "
-        f"<= {GEO_CC_R!r}), "
-        "reach AS (SELECT id AS node, id AS label FROM xyz "
-        "UNION SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node), "
-        "comp AS (SELECT node, MIN(label) AS component FROM reach GROUP BY node), "
-        "srcpick AS (SELECT component FROM (SELECT component, count(*) AS c "
-        "FROM comp GROUP BY component) ORDER BY c DESC, component ASC LIMIT 1), "
-        "hops AS (SELECT component AS node, 0 AS hop FROM srcpick "
-        "UNION SELECT e.dst, h.hop + 1 FROM hops h JOIN e ON e.src = h.node "
-        f"WHERE h.hop < {hop_cap}) "
-        "SELECT x.id, CAST(coalesce(m.h, -1) AS BIGINT) AS hop FROM xyz x "
-        "LEFT JOIN (SELECT node, MIN(hop) AS h FROM hops GROUP BY node) m "
-        "ON m.node = x.id"
-    )
-
-
-WALK_ROUNDS = 3
-WALK_INIT = 1000
-
-
-def q_geo_walk_mass(spark, sf_dir):
-    """Integer random-walk mass after WALK_ROUNDS diffusion steps over
-    the epsilon-graph at GEO_CC_R — PageRank's power iteration with
-    floor division so every round is integer-exact in both engines
-    (operators/graph_metrics.py walk_mass). The link-analysis
-    centrality a crawl pipeline ranks frontiers with, here over the
-    spatial proximity graph; completes the graph-analytics trio
-    (triangles, BFS hops, walk centrality). Fixed round count ->
-    bounded plan depth; each round one bigint-keyed join + aggregate."""
-    from .operators.graph_metrics import walk_mass
-
-    pts, stats = _geo_points(spark, sf_dir)
-    edges = ball_self_join(pts, GEO_CC_R, d=3, stats=stats).select("src", "dst")
-    return walk_mass(edges, nodes=pts, rounds=WALK_ROUNDS, init=WALK_INIT)
-
-
-def sql_geo_walk_mass():
-    """DuckDB oracle: the same WALK_ROUNDS unrolled as chained CTEs;
-    `//` (DuckDB) and `div` (Spark) are both floor division on
-    non-negative BIGINTs, so every share is the identical integer."""
-    rounds = [
-        f"m{t} AS (SELECT e.t AS id, CAST(SUM(m{t-1}.mass // d.deg) AS BIGINT) AS mass "
-        f"FROM e JOIN deg d ON d.s = e.s JOIN m{t-1} ON m{t-1}.id = e.s "
-        "GROUP BY e.t)"
-        for t in range(1, WALK_ROUNDS + 1)
-    ]
-    return (
-        _PTS_CTE
-        + ", e AS (SELECT a.id AS s, b.id AS t FROM xyz a JOIN xyz b ON a.id <> b.id "
-        "WHERE sqrt(((a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)) + (a.z-b.z)*(a.z-b.z)) "
-        f"<= {GEO_CC_R!r}), "
-        "deg AS (SELECT s, count(*) AS deg FROM e GROUP BY s), "
-        f"m0 AS (SELECT id, CAST({WALK_INIT} AS BIGINT) AS mass FROM xyz), "
-        + ", ".join(rounds)
-        + f" SELECT x.id, CAST(coalesce(m{WALK_ROUNDS}.mass, 0) AS BIGINT) AS mass "
-        f"FROM xyz x LEFT JOIN m{WALK_ROUNDS} ON m{WALK_ROUNDS}.id = x.id"
-    )
-
-
-DBSCAN_MIN_PTS = 4  # at sf0.01/GEO_CC_R: 131 core, 21 border, 348 noise, 7 clusters
-
-
-def q_geo_dbscan(spark, sf_dir):
-    """Exact DBSCAN (eps=GEO_CC_R, min_pts=DBSCAN_MIN_PTS) over the
-    geo points — density-based clustering of the reference's
-    epsilon-graph output (operators/dbscan.py). eps reuses GEO_CC_R's
-    verified clearance; min_pts thresholds an integer degree, so every
-    role/cluster decision is integer-exact in both engines."""
-    from .operators.dbscan import dbscan_labels
-
-    pts, stats = _geo_points(spark, sf_dir)
-    return dbscan_labels(
-        pts, GEO_CC_R, DBSCAN_MIN_PTS, d=3, stats=stats
-    ).select("id", "role", "cluster")
-
-
-def sql_geo_dbscan():
-    """DuckDB oracle: the KDD'96 definitions verbatim — degree count
-    (self included), core filter, recursive closure over core-core
-    edges for clusters (label = min core id), min-core-cluster for
-    borders, -1 for noise."""
-    cte = _PTS_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
-    return (
-        cte
-        + ", e AS (SELECT a.id AS src, b.id AS dst FROM xyz a JOIN xyz b ON a.id <> b.id "
-        "WHERE sqrt(((a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)) + (a.z-b.z)*(a.z-b.z)) "
-        f"<= {GEO_CC_R!r}), "
-        "deg AS (SELECT src AS id, count(*) + 1 AS n_eps FROM e GROUP BY src), "
-        "core AS (SELECT x.id FROM xyz x LEFT JOIN deg USING (id) "
-        f"WHERE coalesce(deg.n_eps, 1) >= {DBSCAN_MIN_PTS}), "
-        "ce AS (SELECT e.src, e.dst FROM e WHERE e.src IN (SELECT id FROM core) "
-        "AND e.dst IN (SELECT id FROM core)), "
-        "reach AS (SELECT id AS node, id AS label FROM core "
-        "UNION SELECT ce.dst, r.label FROM reach r JOIN ce ON ce.src = r.node), "
-        "comp AS (SELECT node AS id, MIN(label) AS cluster FROM reach GROUP BY node), "
-        "border AS (SELECT e.src AS id, CAST(1 AS BIGINT) AS role, MIN(c.cluster) AS cluster "
-        "FROM e JOIN comp c ON c.id = e.dst "
-        "WHERE e.src NOT IN (SELECT id FROM core) GROUP BY e.src) "
-        "SELECT id, CAST(2 AS BIGINT) AS role, cluster FROM comp "
-        "UNION ALL SELECT id, role, cluster FROM border "
-        "UNION ALL SELECT x.id, CAST(0 AS BIGINT) AS role, CAST(-1 AS BIGINT) AS cluster "
-        "FROM xyz x WHERE x.id NOT IN (SELECT id FROM comp) "
-        "AND x.id NOT IN (SELECT id FROM border)"
-    )
-
-
 def sql_geo_degree_hist():
     return (
         _PTS_CTE
@@ -3735,7 +3558,7 @@ def q_nn_event(spark, sf_dir):
     sf0.01 is 1.15e-3, nine orders above the GEMM-vs-explicit ulp
     skew (pinned by test_nn_event_rank_clearance). The metre payload
     is the op-order-mirrored integer haversine evaluated as a JVM
-    expression (r6 — the geo_sssp edge-weight discipline: the SQL
+    expression (r6 — the integer-metre discipline: the SQL
     rendering is bit-identical to the numpy kernel it replaces,
     verified 0 mismatches over the sf0.1 pair stream, and drops the
     finalize's Python stage)."""
@@ -5437,69 +5260,6 @@ def sql_tile_median():
     )
 
 
-KCORE_K = 3  # core degree threshold
-KCORE_ROUNDS = 12  # bounded-peel contract (exact k-core if converged)
-
-
-def q_geo_kcore(spark, sf_dir):
-    """BOUNDED-ROUND K-CORE PEEL over the epsilon-graph: 12 rounds of
-    "remove vertices with < K surviving neighbors" — the graph-
-    density decomposition community detection and dense-subgraph
-    mining start from. The op's contract is the 12-round peel (equal
-    to the exact k-core whenever peeling converges earlier, which the
-    fixture does; the bounded contract is what an exact unrolled SQL
-    oracle can render — geo_sssp's discipline). Output (id, in_core).
-
-    Physical plan: the data-adaptive bounded peel
-    (operators/graph_iter.py) — per distributed round, ONE join of
-    the edge stream against the surviving set on both endpoints + a
-    degree count, O(surviving edges) and partial-aggregable; below
-    graph_iter.SMALL_CUTOFF edges the whole 12-round peel runs as one
-    bounded numpy task with a result-identical fixpoint early exit
-    (peeling is monotone — a no-removal round makes every later round
-    a no-op)."""
-    from .operators.graph_iter import bounded_kcore
-    from .plans.session import mark_releasable
-
-    pts, stats = _geo_points(spark, sf_dir)
-    edges = mark_releasable(
-        ball_self_join(pts, GEO_CC_R, d=3, stats=stats)
-        .select("src", "dst")
-        .persist()
-    )
-    n_edges = edges.count()  # materialize before reuse + cutoff pick
-    alive = bounded_kcore(edges, KCORE_K, KCORE_ROUNDS, n_edges=n_edges)
-    return (
-        pts.select("id")
-        .join(alive.withColumn("_in", F.lit(1)), "id", "left")
-        .select("id", F.coalesce("_in", F.lit(0)).cast("bigint").alias("in_core"))
-    )
-
-
-def sql_geo_kcore():
-    cte = _PTS_CTE.replace("pts AS (", "pts AS MATERIALIZED (", 1).replace(
-        "xyz AS (", "xyz AS MATERIALIZED (", 1
-    )
-    dchord = "sqrt(((a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)) + (a.z-b.z)*(a.z-b.z))"
-    rounds = []
-    for i in range(KCORE_ROUNDS):
-        p = f"a{i}"
-        rounds.append(
-            f"a{i + 1} AS MATERIALIZED (SELECT {p}.id FROM {p} "
-            f"JOIN e ON e.src = {p}.id JOIN {p} b ON b.id = e.dst "
-            f"GROUP BY {p}.id HAVING count(*) >= {KCORE_K})"
-        )
-    return (
-        cte
-        + f", e AS MATERIALIZED (SELECT a.id AS src, b.id AS dst FROM xyz a "
-        f"JOIN xyz b ON a.id <> b.id WHERE {dchord} <= {GEO_CC_R!r}), "
-        "a0 AS (SELECT id FROM xyz), "
-        + ", ".join(rounds)
-        + f" SELECT x.id, CAST(CASE WHEN k.id IS NULL THEN 0 ELSE 1 END AS BIGINT) "
-        f"AS in_core FROM xyz x LEFT JOIN a{KCORE_ROUNDS} k ON k.id = x.id"
-    )
-
-
 def q_lang_confusion(spark, sf_dir):
     """LANGUAGE-ID CONFUSION MATRIX: labeled lang x predicted
     lang_idx with counts — the model-evaluation readout over the
@@ -5884,8 +5644,8 @@ def q_buffer_join(spark, sf_dir):
     pairs = ball_self_join(pts, chord, d=3, stats=stats).select("src", "dst")
     lon1, lat1 = geometry.sql_lonlat_exprs("src")
     lon2, lat2 = geometry.sql_lonlat_exprs("dst")
-    # JVM integer haversine (r6): bit-identical to the numpy kernel it
-    # replaces (geo_sssp's edge-weight discipline), one less Python
+    # JVM integer haversine (r6): the op-order-mirrored SQL fragment is
+    # bit-identical to the numpy kernel it replaces, one less Python
     # stage in the pair pipeline
     md = pairs.select(
         "src",
@@ -5918,118 +5678,6 @@ def sql_buffer_join():
         "JOIN pts pa ON pa.id = cand.src JOIN pts pb ON pb.id = cand.dst "
         "JOIN documents d ON d.doc_id = cand.src "
         f"WHERE {m} <= ({BUF_BASE_KM} + d.n_chars % {BUF_MOD}) * 1000"
-    )
-
-
-SSSP_ROUNDS = 16  # bounded-hop contract: distances over <=16 edges
-
-
-def q_geo_sssp(spark, sf_dir):
-    """BOUNDED-HOP WEIGHTED SHORTEST PATH (Bellman-Ford, 16 rounds)
-    over the epsilon-graph with INTEGER-METRE edge weights, from the
-    same data-derived source as geo_bfs_hops (min-id vertex of the
-    largest component). The op's contract is the <=SSSP_ROUNDS-hop
-    distance — well-defined at any scale, and what makes an exact SQL
-    oracle possible (the oracle unrolls the same rounds as chained
-    CTEs, walk_mass's discipline). Nodes beyond the hop bound report
-    -1. Max path = 16 x 2e7 m, far inside BIGINT.
-
-    Physical plan: edge weights are pure JVM (the shared
-    haversine-metre fragment over both endpoints' derived lon/lat —
-    no Python anywhere); each relaxation round is ONE src-keyed join
-    + one min-combine groupBy, both partial-aggregable; lineage is
-    truncated per round. The r5-documented refinement is now in:
-    relaxation is FRONTIER-FILTERED (delta-stepping-style improved-
-    only re-emission, operators/graph_iter.py) so the per-round
-    shuffle is O(frontier edges), with a result-identical early exit
-    at the fixpoint; below graph_iter.SMALL_CUTOFF edges the whole
-    bounded iteration collapses into one numpy task (components.py's
-    small-graph discipline — at bench scale the 16 x 2 fixed-latency
-    shuffle rounds dwarf the <20 ms of arithmetic)."""
-    from .operators.components import connected_components
-    from .operators.graph_iter import (
-        SMALL_CUTOFF,
-        bounded_sssp,
-        sssp_from_largest_component,
-    )
-    from .plans.session import mark_releasable
-
-    pts, stats = _geo_points(spark, sf_dir)
-    edges = mark_releasable(
-        ball_self_join(pts, GEO_CC_R, d=3, stats=stats)
-        .select("src", "dst")
-        .persist()
-    )
-    n_edges = edges.count()  # materialize before fan-out + cutoff pick
-    lon1, lat1 = geometry.sql_lonlat_exprs("src")
-    lon2, lat2 = geometry.sql_lonlat_exprs("dst")
-    w = geometry.sql_haversine_m_int(lon1, lat1, lon2, lat2)
-    ew = edges.withColumn("w", F.expr(w))
-    if 0 < n_edges <= SMALL_CUTOFF:
-        # fused small path: union-find + largest-component source pick
-        # + all relaxation rounds in ONE bounded task (same pick rule;
-        # any edge component (size >= 2) outranks every isolated
-        # singleton, so the node table cannot influence the pick)
-        d = sssp_from_largest_component(ew, SSSP_ROUNDS)
-    else:
-        comp = connected_components(edges, nodes=pts)
-        pick = (
-            comp.groupBy("component")
-            .agg(F.count("*").alias("c"))
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"), "component")
-                ).alias("m")
-            )
-            .select(F.col("m.component"))
-            .collect()[0][0]
-        )
-        d = bounded_sssp(ew, int(pick), SSSP_ROUNDS, n_edges=n_edges)
-    return (
-        pts.select("id")
-        .join(d, "id", "left")
-        .select("id", F.coalesce("d", F.lit(-1)).cast("bigint").alias("dist_m"))
-    )
-
-
-def sql_geo_sssp():
-    """DuckDB oracle: same component-derived source, same integer
-    weights, SSSP_ROUNDS relaxation rounds unrolled as chained CTEs
-    (recursive CTEs cannot take the per-round min; unrolling renders
-    the iteration exactly)."""
-    # MATERIALIZED pins each CTE to one evaluation — the unrolled
-    # rounds reference e 16x, and inlining would re-open the parquet
-    # per reference (fd exhaustion). DuckDB-only text; the engine
-    # never parses this string.
-    cte = _PTS_CTE.replace("WITH ", "WITH RECURSIVE ", 1).replace(
-        "pts AS (", "pts AS MATERIALIZED (", 1
-    ).replace("xyz AS (", "xyz AS MATERIALIZED (", 1)
-    dchord = "sqrt(((a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)) + (a.z-b.z)*(a.z-b.z))"
-    m = geometry.sql_haversine_m_int("pa.lon", "pa.lat", "pb.lon", "pb.lat")
-    rounds = []
-    for i in range(SSSP_ROUNDS):
-        p = f"d{i}"
-        rounds.append(
-            f"d{i + 1} AS MATERIALIZED (SELECT id, min(d) AS d FROM ("
-            f"SELECT id, d FROM {p} UNION ALL "
-            f"SELECT e.dst AS id, {p}.d + e.w AS d FROM {p} "
-            f"JOIN e ON e.src = {p}.id) GROUP BY id)"
-        )
-    return (
-        cte
-        + f", eb AS MATERIALIZED (SELECT a.id AS src, b.id AS dst FROM xyz a JOIN xyz b "
-        f"ON a.id <> b.id WHERE {dchord} <= {GEO_CC_R!r}), "
-        f"e AS MATERIALIZED (SELECT eb.src, eb.dst, {m} AS w FROM eb "
-        "JOIN pts pa ON pa.id = eb.src JOIN pts pb ON pb.id = eb.dst), "
-        "reach AS (SELECT id AS node, id AS label FROM xyz "
-        "UNION SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node), "
-        "comp AS (SELECT node, MIN(label) AS component FROM reach GROUP BY node), "
-        "srcpick AS (SELECT component FROM (SELECT component, count(*) AS c "
-        "FROM comp GROUP BY component) ORDER BY c DESC, component ASC LIMIT 1), "
-        "d0 AS (SELECT component AS id, CAST(0 AS BIGINT) AS d FROM srcpick), "
-        + ", ".join(rounds)
-        + f" SELECT x.id, CAST(coalesce(dd.d, -1) AS BIGINT) AS dist_m "
-        f"FROM xyz x LEFT JOIN d{SSSP_ROUNDS} dd ON dd.id = x.id"
     )
 
 
@@ -6325,15 +5973,16 @@ def q_knn_outlier(spark, sf_dir):
     is hash-exact with no float-summation-order caveat.
 
     Physical plan: ONE exact-kNN pass (verified two-phase plan), the
-    op-order-mirrored metre finalize as a JVM expression (r6 — the
-    geo_sssp edge-weight discipline, bit-identical to the numpy
-    kernel it replaces and one less Python stage), an id-keyed
+    op-order-mirrored metre finalize as a JVM expression (r6 —
+    bit-identical to the numpy kernel it replaces and one less
+    Python stage), an id-keyed
     partial agg for S, and one edge-stream join keyed on dst — every
     post-kNN stage is O(nk) ids+ints, no vectors move. The metre
     stream is persisted + materialized ONCE before its triple fan-out
     (S agg, dst join, src join): without it each consumer re-ran the
-    full kNN (measured 3x dist_comps at sf0.1 — the AQE persist-race
-    discipline, see dbscan.py)."""
+    full kNN (measured 3x dist_comps at sf0.1). The count()
+    materializes the persist before the fan-out: under AQE, consumers
+    planned before the cache is filled would each recompute it."""
     from .plans.session import mark_releasable
 
     pts, stats = _geo_points(spark, sf_dir)
@@ -6445,10 +6094,6 @@ def catalog():
         "knn_upsert_chain": (q_knn_upsert_chain, sql_geo_knn()),
         "geo_degree_hist": (q_geo_degree_hist, sql_geo_degree_hist()),
         "geo_components": (q_geo_components, sql_geo_components()),
-        "geo_dbscan": (q_geo_dbscan, sql_geo_dbscan()),
-        "geo_triangles": (q_geo_triangles, sql_geo_triangles()),
-        "geo_bfs_hops": (q_geo_bfs_hops, sql_geo_bfs_hops()),
-        "geo_walk_mass": (q_geo_walk_mass, sql_geo_walk_mass()),
         "geo_rknn": (q_geo_rknn, sql_geo_rknn()),
         "geo_closest_pair": (q_geo_closest_pair, sql_geo_closest_pair()),
         "events_rollup": (q_events_rollup, sql_events_rollup()),
@@ -6491,7 +6136,6 @@ def catalog():
         "tile_interp": (q_tile_interp, sql_tile_interp()),
         "session_overlap": (q_session_overlap, sql_session_overlap()),
         "geohash_assign": (q_geohash_assign, sql_geohash_assign()),
-        "geo_sssp": (q_geo_sssp, sql_geo_sssp()),
         "buffer_join": (q_buffer_join, sql_buffer_join()),
         "emb_quantize": (q_emb_quantize, sql_emb_quantize()),
         "fuzzy_join": (q_fuzzy_join, sql_fuzzy_join()),
@@ -6501,7 +6145,6 @@ def catalog():
         "tile_contours": (q_tile_contours, sql_tile_contours()),
         "tile_compare": (q_tile_compare, sql_tile_compare()),
         "tile_median": (q_tile_median, sql_tile_median()),
-        "geo_kcore": (q_geo_kcore, sql_geo_kcore()),
         "lang_confusion": (q_lang_confusion, sql_lang_confusion()),
         "user_gini": (q_user_gini, sql_user_gini()),
         "events_cube": (q_events_cube, sql_events_cube()),

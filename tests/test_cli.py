@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 
 from covertree_spark import cli
+from covertree_spark.plans import metrics
 from covertree_spark.sources import vecfiles
 
 
@@ -25,9 +26,15 @@ def fvecs(tmp_path_factory):
 def test_cvor_matches_bf_and_writes_artifacts(spark, fvecs, tmp_path):
     edges_f = str(tmp_path / "edges.txt")
     stats_f = str(tmp_path / "stats.json")
+    snap = metrics.driver_snapshot()
     s_cvor = cli.run(
         ["-i", fvecs, "-r", "2.0", "-M", "cvor", "-o", edges_f, "-j", stats_f],
         spark=spark,
+    )
+    # writing the edge file reads the materialized edge set: no
+    # distance computation after the count the stats report
+    assert s_cvor["dist_comps"] == (
+        metrics.current().value + metrics.driver_delta(snap)
     )
     s_bf = cli.run(["-i", fvecs, "-r", "2.0", "-M", "bf"], spark=spark)
     assert s_cvor["num_edges"] == s_bf["num_edges"]

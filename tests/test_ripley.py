@@ -9,6 +9,7 @@ edge fails loudly instead of silently flipping a pair across a bin.
 
 import numpy as np
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from covertree_spark import queries as Q
 from covertree_spark.core import covertree as ct
@@ -128,3 +129,52 @@ def test_cross_k_counts_vs_numpy():
         r.r_idx: r.pairs for r in Q.q_cross_k(spark, SF_TINY).collect()
     }
     assert got == want
+
+
+def test_bin_counts_match_pair_stream_agg(spark):
+    """ball_self_join_bin_counts == the pair-stream conditional-sum
+    aggregation it replaced, for both the parity (cross_k) and
+    src<dst (ripley_k) filters, on a clustered fixture."""
+    from tests.conftest import make_blobs
+
+    from covertree_spark.operators.ball_join import (
+        ball_self_join,
+        ball_self_join_bin_counts,
+    )
+    from covertree_spark.operators.partition import cell_stats
+
+    X = make_blobs(400, 3, 6, seed=5, spread=0.8)
+    rows = [
+        (i, [float(v) for v in x], int(i) % 7) for i, x in enumerate(X)
+    ]
+    pts = spark.createDataFrame(
+        rows, "id long, vec array<float>, cell long"
+    ).persist()
+    stats = cell_stats(pts, 3, "cell", None)
+    radii = [0.5, 1.5, 3.0, 6.0]
+
+    def stream_counts(where):
+        pairs = ball_self_join(pts, radii[-1], d=3, stats=stats).where(where)
+        row = pairs.agg(
+            *[
+                F.sum((F.col("dist") <= F.lit(r)).cast("bigint")).alias(f"c{i}")
+                for i, r in enumerate(radii)
+            ]
+        ).collect()[0]
+        return tuple(row[f"c{i}"] for i in range(len(radii)))
+
+    # cross-parity selection
+    old = stream_counts((F.col("src") % 2 == 0) & (F.col("dst") % 2 == 1))
+    new = ball_self_join_bin_counts(
+        pts, radii, d=3, stats=stats, src_mod2=0, dst_mod2=1
+    ).collect()[0]
+    assert tuple(new[f"c{i}"] for i in range(len(radii))) == old
+
+    # unordered-pairs selection, with a chunk size that forces the
+    # chunked GEMM loop to take several iterations
+    old2 = stream_counts(F.col("src") < F.col("dst"))
+    new2 = ball_self_join_bin_counts(
+        pts, radii, d=3, stats=stats, lt_only=True, chunk_rows=64
+    ).collect()[0]
+    assert tuple(new2[f"c{i}"] for i in range(len(radii))) == old2
+    pts.unpersist()
