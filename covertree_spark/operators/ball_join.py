@@ -70,10 +70,18 @@ def ball_self_join(
         if len(H) <= brute_cutoff:
             # small build side: a BLAS matrix pass beats tree descent
             # (and in high-d with r near the distance concentration the
-            # tree cannot prune anyway — same edge set either way)
-            d2 = ct.pairwise_sq_dists(Q, H)
-            qi, pi = np.nonzero(d2 <= radius * radius)
-            di = np.sqrt(d2[qi, pi])
+            # tree cannot prune anyway — same edge set either way).
+            # Rows go in blocks of about 2**20 distances (8 MB), whole
+            # multiples of 256 rows: BLAS then blocks every row as in
+            # one unchunked GEMM, so the distances match it bit for bit
+            # (unaligned blocks moved last bits).
+            step = max(256, (1 << 20) // len(H) // 256 * 256)
+            parts = []
+            for s in range(0, len(Q), step):
+                d2 = ct.pairwise_sq_dists(Q[s : s + step], H)
+                qc, pc = np.nonzero(d2 <= radius * radius)
+                parts.append((qc + s, pc, np.sqrt(d2[qc, pc])))
+            qi, pi, di = (np.concatenate(a) for a in zip(*parts))
         else:
             qi, pi, di = ct.radius_query(tree_fn(), H, Q, radius)
         src = qid[qi]

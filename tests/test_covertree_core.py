@@ -72,6 +72,90 @@ def test_ball_query_per_query_radius():
         assert got == expected
 
 
+def _brute_radius(X, Q, radii):
+    """Oracle (query, point) pairs with d <= r_q, in (query, point)
+    order, plus their distances."""
+    D = np.sqrt(ct.pairwise_sq_dists(Q, X))
+    qi, pi = np.nonzero(D <= np.broadcast_to(radii, (len(Q),))[:, None])
+    return qi, pi, D[qi, pi]
+
+
+def _assert_radius_matches(got, expected):
+    qi, pi, di = got
+    order = np.lexsort((pi, qi))
+    eq, ep, ed = expected
+    assert np.array_equal(qi[order], eq)
+    assert np.array_equal(pi[order], ep)
+    assert np.allclose(di[order], ed, rtol=1e-9, atol=1e-12)
+
+
+def test_ball_query_crosses_query_chunks():
+    """More queries than one descent chunk, with per-query radii: every
+    chunk must use its own slice of the radii."""
+    X = make_blobs(800, 6, 8, seed=9)
+    rng = np.random.default_rng(9)
+    nq = 3 * ct._CHUNK_Q + 77
+    Q = X[rng.integers(0, len(X), nq)] + rng.normal(0, 0.5, size=(nq, 6))
+    radii = rng.uniform(0.5, 4.0, nq)
+    tree = ct.build(X)
+    got = ct.radius_query(tree, X, Q, radii)
+    expected = _brute_radius(X, Q, radii)
+    assert len(expected[0]) > nq
+    _assert_radius_matches(got, expected)
+
+
+def test_ball_query_one_point_tree():
+    """n = 1: the root has no children and is itself the only leaf."""
+    X = np.array([[1.0, 2.0, 3.0]], dtype=np.float32)
+    tree = ct.build(X)
+    assert tree.num_vertices == 1
+    rng = np.random.default_rng(10)
+    nq = ct._CHUNK_Q + 44
+    Q = X[0] + rng.normal(0, 1.0, size=(nq, 3))
+    radii = rng.uniform(0.0, 3.0, nq)
+    expected = _brute_radius(X, Q, radii)
+    assert 0 < len(expected[0]) < nq
+    _assert_radius_matches(ct.radius_query(tree, X, Q, radii), expected)
+
+
+def test_ball_query_coincident_tree():
+    """All points coincide: the root's children are radius-0 leaves."""
+    X = np.tile(np.array([[0.5, -1.0, 2.0, 0.0]], dtype=np.float32), (40, 1))
+    tree = ct.build(X)
+    kids = tree.children(0)
+    assert len(kids) == 40 and np.all(tree.radii[kids] == 0.0)
+    rng = np.random.default_rng(11)
+    nq = ct._CHUNK_Q + 13
+    Q = np.concatenate([X[:1], X[0] + rng.normal(0, 1.0, size=(nq - 1, 4))])
+    expected = _brute_radius(X, Q, 1.5)
+    assert 40 < len(expected[0]) < 40 * nq
+    _assert_radius_matches(ct.radius_query(tree, X, Q, 1.5), expected)
+
+
+def test_ball_query_working_set_is_chunk_bounded():
+    """The root step must not gather the whole batch's root fan-out:
+    12k 32-d queries against a 3k-point blob tree stay under 64 MiB of
+    traced allocations, although one gathered (query, child) float64
+    block of the batch would exceed 256 MiB."""
+    import tracemalloc
+
+    X = make_blobs(3000, 32, 128, seed=5, spread=0.3)
+    tree = ct.build(X)
+    fan_out = len(tree.children(0))
+    rng = np.random.default_rng(12)
+    nq = 12_000
+    Q = X[rng.integers(0, len(X), nq)] + rng.normal(0, 0.03, size=(nq, 32))
+    assert nq * fan_out * 32 * 8 > 256 * 2**20
+    tracemalloc.start()
+    try:
+        qi, pi, di = ct.radius_query(tree, X, Q, 0.6)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 * 2**20, f"radius_query peaked at {peak / 2**20:.0f} MiB"
+    assert len(np.unique(qi)) == nq
+
+
 @pytest.mark.parametrize("k", [1, 5, 10])
 def test_knn_matches_bruteforce(k):
     X = make_blobs(400, 6, 8, seed=4)
