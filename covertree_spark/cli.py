@@ -81,6 +81,7 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     from .operators.edges import edge_summary, write_edge_file, write_edges
     from .operators.partition import (
         adaptive_voronoi_k,
+        align,
         assign_two_level,
         coarse_group_of,
         voronoi_centers,
@@ -127,7 +128,11 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         _fk, coarse_k, sample = adaptive_voronoi_k(n, nprocs)
         fine_k = max(num_centers, 4)
         fine = voronoi_centers(vecs, k=fine_k, sample_size=sample)
-        pts = assign_two_level(vecs, fine, coarse_group_of(fine, coarse_k))
+        # the aligned layout holds each cell in one partition, so
+        # cell_stats is exact and the join reads homes in place
+        pts = mark_releasable(
+            align(assign_two_level(vecs, fine, coarse_group_of(fine, coarse_k)))
+        )
         edges = ball_self_join(
             pts, args.radius, d=d, cover=args.cover, leaf_size=args.leaf_size
         )

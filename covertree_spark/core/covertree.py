@@ -90,6 +90,16 @@ def dists_to(points: np.ndarray, x: np.ndarray) -> np.ndarray:
     return np.sqrt(np.einsum("ij,ij->i", d, d))
 
 
+def centroid_radius(X: np.ndarray) -> tuple[np.ndarray, float]:
+    """Centroid (sum / n) and circumradius (max distance to the
+    centroid) of a non-empty point block, from direct differences. A
+    summary, not a search: not counted in ``DIST_COMPS``."""
+    X = np.asarray(X, dtype=np.float64)
+    c = X.sum(axis=0) / len(X)
+    diff = X - c
+    return c, float(np.sqrt(np.einsum("ij,ij->i", diff, diff).max()))
+
+
 def row_dists(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Rowwise L2 distance between paired rows of ``a`` and ``b``."""
     global DIST_COMPS

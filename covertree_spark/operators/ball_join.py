@@ -8,7 +8,8 @@ Physical plan (the reference's cvor pipeline re-expressed,
 /root/reference/src/dist_point_vector.cpp:962-996):
 
   points(id, vec, cell)                [aligned: partition.align]
-    -> cell_stats (2 JVM aggs)          [broadcast]
+    -> cell_stats (one mapInPandas      [broadcast]
+       pass, merged on the driver)
     -> partition.route(radius=r)        [mapInPandas: one ghost row per
                                          foreign candidate cell]
     -> partition.cell_cogroup on cell   [only the ghost side is shuffled;
@@ -61,7 +62,7 @@ def ball_self_join(
     registered releasable (see knn_self_join docstring); passing
     precomputed stats skips both."""
     if stats is None:
-        # scanned by stats (2x), ghosts, homes
+        # scanned by stats, ghosts, homes
         points = mark_releasable(points.persist())
         stats = cell_stats(points, d, fine_col=fine_col)
 

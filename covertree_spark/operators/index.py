@@ -61,8 +61,7 @@ def build_trees(
         # per-cell pruning stats ride with the index row, so queries
         # over a loaded index need no extra stats scan (the index is
         # self-describing — see stats_from_trees)
-        centroid = X.mean(axis=0)
-        circ = float(np.sqrt(ct.pairwise_sq_dists(X, centroid[None, :]).max()))
+        centroid, circ = ct.centroid_radius(X)
         # f32 narrowing ONLY when exact for this block (round-4 ADVICE:
         # silently-lossy points against exact f64 radii can violate the
         # covering invariant by ~1e-7 and drop true neighbors). The

@@ -111,10 +111,10 @@ def knn_self_join(
     ``plans.session.mark_releasable`` — callers running many queries
     in one session should call ``release_intermediates()`` after
     materializing the result. Passing a precomputed ``stats`` (see
-    ``partition.cell_stats``) skips the two stats scans AND the
+    ``partition.cell_stats``) skips the stats scan AND the
     input persist — the caller owns the input's storage level."""
     if stats is None:
-        # scanned by stats (2x), homes, (queries)
+        # scanned by stats, homes, (queries)
         points = mark_releasable(points.persist())
         stats = cell_stats(points, d, fine_col=fine_col)
     self_join = queries is None

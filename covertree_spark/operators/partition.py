@@ -13,8 +13,11 @@ stages:
                            threshold re-encode at a finer resolution
                            (replaces LPT assignment + work stealing,
                            reference O3/O6)
-  * ``cell_stats``       — per-cell (count, centroid, circumradius),
-                           broadcast; the triangle-inequality bound
+  * ``cell_stats``       — per-cell (count, centroid, circumradius)
+                           in one pass: per-partition partials merged
+                           on the driver, exact when each cell lives
+                           in one partition (``align``); broadcast.
+                           The triangle-inequality bound
                            ``d(q,centroid) - circumradius`` drives
                            routing — valid in ANY metric space, so geo
                            cells and Voronoi cells share one code path
@@ -33,9 +36,10 @@ stages:
   * ``align``            — the one ingest shuffle: persist points
                            hash-partitioned on ``cell``
 
-All stats are pure functions of the data (never of the partitioning),
-so results are invariant to parallelism — the reference's test.sh
-cross-rank-count property.
+On the aligned layout the stats are pure functions of the data;
+on any other layout a cell's radius may be looser but still bounds
+it. Results are invariant to parallelism either way — the
+reference's test.sh cross-rank-count property.
 """
 
 from __future__ import annotations
@@ -397,39 +401,70 @@ def split_hot_cells(
 def cell_stats(
     points: DataFrame, d: int, cell_col: str = "cell", fine_col: str | None = None
 ) -> CellStats:
-    """Two-pass per-group stats, all JVM-side partial aggregation:
-    pass 1 count + per-dimension sums -> centroid; pass 2 max distance
-    to centroid -> circumradius. Result is tiny (O(#groups)) and gets
-    broadcast to every task.
+    """Per-group (count, centroid, circumradius), entries sorted by key,
+    in ONE pass (one Spark job, no shuffle): each input partition
+    yields a partial per key it holds, and the driver merges the
+    partials. Result is tiny (O(#groups)) and gets broadcast to every
+    task. ``d`` is not used; it stays for callers that pass it.
+
+    Merge rule, per key over its partials p: counts add, the centroid
+    is the count-weighted mean of the partial centroids c_p, and the
+    circumradius is max(‖c − c_p‖ + r_p), the smallest ball about c
+    that encloses every partial's ball, so it bounds every point on
+    any layout. A key held by one partition keeps its partial as is,
+    so the stats are exact whenever each key lives in one partition,
+    as on the aligned layout (``align``).
 
     With ``fine_col``, groups are (cell, fine) pairs: sub-cell bounds
     for pruning, coarse cell for partitioning."""
     keys = [cell_col] + ([fine_col] if fine_col else [])
-    sums = points.groupBy(*keys).agg(
-        F.count("*").alias("cnt"),
-        *[F.sum(F.col("vec")[i]).alias(f"s{i}") for i in range(d)],
+    schema = ", ".join(f"{k} bigint" for k in keys) + (
+        ", cnt bigint, centroid array<double>, circumradius double"
     )
-    cent = sums.select(
-        *keys,
-        "cnt",
-        F.array(*[F.col(f"s{i}") / F.col("cnt") for i in range(d)]).alias("centroid"),
+
+    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from ..core.covertree import centroid_radius
+
+        parts = [b for b in batches if len(b)]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        X = vec_matrix(pdf)
+        uk, inv = np.unique(pdf[keys].to_numpy(np.int64), axis=0, return_inverse=True)
+        inv = inv.reshape(-1)
+        cnt = np.bincount(inv)
+        # a stable sort keeps each key's rows in scan order
+        blocks = np.split(np.argsort(inv, kind="stable"), np.cumsum(cnt)[:-1])
+        cr = [centroid_radius(X[ix]) for ix in blocks]
+        out = pd.DataFrame(uk, columns=keys)
+        out["cnt"] = cnt
+        out["centroid"] = [c for c, _ in cr]
+        out["circumradius"] = [r for _, r in cr]
+        yield out
+
+    pdf = (
+        points.select(*[F.col(k).cast("bigint") for k in keys], "vec")
+        .mapInPandas(counted_stream(partials), schema=schema)
+        .toPandas()
     )
-    joined = points.join(F.broadcast(cent), keys)
-    dist2 = sum(
-        (F.col("vec")[i] - F.col("centroid")[i]) * (F.col("vec")[i] - F.col("centroid")[i])
-        for i in range(d)
+    uk, first, inv = np.unique(
+        pdf[keys].to_numpy(np.int64), axis=0, return_index=True, return_inverse=True
     )
-    radii = (
-        joined.groupBy(*keys)
-        .agg(F.max(dist2).alias("r2"))
-        .select(*keys, F.sqrt(F.col("r2")).alias("circumradius"))
-    )
-    pdf = cent.join(radii, keys).orderBy(*keys).toPandas()
+    inv = inv.reshape(-1)
+    n = pdf["cnt"].to_numpy(np.int64)
+    C = np.stack(pdf["centroid"].to_numpy()).astype(np.float64)
+    R = pdf["circumradius"].to_numpy(np.float64)
+    counts = np.zeros(len(uk), np.int64)
+    np.add.at(counts, inv, n)
+    S = np.zeros((len(uk), C.shape[1]))
+    np.add.at(S, inv, n[:, None] * C)
+    split = np.bincount(inv) > 1
+    cent = np.where(split[:, None], S / counts[:, None], C[first])
+    diff = C - cent[inv]
+    circ = np.zeros(len(uk))
+    np.maximum.at(circ, inv, np.sqrt(np.einsum("ij,ij->i", diff, diff)) + R)
     return CellStats(
-        cell_ids=pdf[cell_col].to_numpy(dtype=np.int64),
-        counts=pdf["cnt"].to_numpy(dtype=np.int64),
-        centroids=np.stack(pdf["centroid"].to_numpy()).astype(np.float64),
-        circumradii=pdf["circumradius"].to_numpy(dtype=np.float64),
+        cell_ids=uk[:, 0].copy(), counts=counts, centroids=cent, circumradii=circ
     )
 
 

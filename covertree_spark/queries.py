@@ -103,7 +103,7 @@ _PTS_CTE = (
 # hot-split rule, layout version), so (a) a new session over the same
 # inputs resumes the ingest — reads the committed (id, vec, cell,
 # cell_fine) table and its stats sidecar back instead of re-running
-# assignment + two stats scans — and (b) a session whose decomposition
+# assignment + the stats scan — and (b) a session whose decomposition
 # differs (e.g. another core count -> another res) gets a DIFFERENT
 # snapshot, never a numerically-colliding cell space (round-3 ADVICE
 # high: cell ids are not resolution-prefixed, so mixing decompositions
@@ -181,7 +181,7 @@ def _checkpointed_layout(spark, table: str, params: dict, build_fn, d: int):
     stats, snapshot id). On resume BOTH the point table and its stats
     SIDECAR are read back — a second session pays one aligned read +
     the in-session hash repartition instead of cell assignment, the
-    ingest shuffle and two full stats scans (north_rule: every stage
+    ingest shuffle and the full stats scan (north_rule: every stage
     checkpoints; ingest is the most expensive stage at 10^12 rows)."""
     from .plans.checkpoint import snapshot_id
 

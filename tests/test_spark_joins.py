@@ -116,6 +116,86 @@ def test_aligned_layout_plan_shape(spark, geo_points):
         aligned.unpersist()
 
 
+@pytest.fixture(scope="module")
+def fine_points(spark, geo_points):
+    """geo_points plus ``cell_fine``, the res-5 cell of each point."""
+    ll = pt.assign_cells(src.doc_points_lonlat(spark, SF_TINY), res=5)
+    return geo_points.join(ll.select("id", F.col("cell").alias("cell_fine")), "id")
+
+
+def _stats_oracle(df):
+    """Per (cell, cell_fine) key in key order: numpy count, mean and
+    max distance to the mean, plus each point's key index, its vector
+    and the key table."""
+    pdf = df.select("cell", "cell_fine", "vec").toPandas()
+    X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+    keys, inv = np.unique(
+        pdf[["cell", "cell_fine"]].to_numpy(np.int64), axis=0, return_inverse=True
+    )
+    inv = inv.reshape(-1)
+    cnt = np.bincount(inv)
+    cent = np.stack([X[inv == i].mean(axis=0) for i in range(len(keys))])
+    rad = np.array([
+        np.linalg.norm(X[inv == i] - cent[i], axis=1).max() for i in range(len(keys))
+    ])
+    return keys, cnt, cent, rad, inv, X
+
+
+def test_cell_stats_aligned_matches_numpy(spark, fine_points):
+    """On the aligned layout every key lives in one partition, so the
+    one-pass stats are the exact per-key count, centroid and radius."""
+    aligned = pt.align(fine_points)
+    try:
+        st = pt.cell_stats(aligned, 3, fine_col="cell_fine")
+        keys, cnt, cent, rad, _inv, _X = _stats_oracle(aligned)
+    finally:
+        aligned.unpersist()
+    assert len(keys) > 128
+    np.testing.assert_array_equal(st.cell_ids, keys[:, 0])
+    np.testing.assert_array_equal(st.counts, cnt)
+    np.testing.assert_allclose(st.centroids, cent, rtol=0, atol=1e-12)
+    np.testing.assert_allclose(st.circumradii, rad, rtol=1e-12, atol=1e-15)
+
+
+def test_cell_stats_merges_split_keys(spark, fine_points):
+    """Hash-partitioned on id, keys span several partitions: the merged
+    counts and centroids are still the per-key ones, and every point
+    lies within its entry's radius."""
+    misaligned = fine_points.repartition(7, "id").persist()
+    try:
+        parts_per_key = (
+            misaligned.withColumn("p", F.spark_partition_id())
+            .groupBy("cell", "cell_fine").agg(F.countDistinct("p").alias("p"))
+            .agg(F.max("p")).first()[0]
+        )
+        st = pt.cell_stats(misaligned, 3, fine_col="cell_fine")
+        keys, cnt, cent, _rad, inv, X = _stats_oracle(misaligned)
+    finally:
+        misaligned.unpersist()
+    assert parts_per_key > 1
+    np.testing.assert_array_equal(st.cell_ids, keys[:, 0])
+    np.testing.assert_array_equal(st.counts, cnt)
+    np.testing.assert_allclose(st.centroids, cent, rtol=0, atol=1e-12)
+    dist = np.linalg.norm(X - st.centroids[inv], axis=1)
+    assert (dist <= st.circumradii[inv] + 1e-12).all()
+
+
+def test_cell_stats_is_one_job(spark, fine_points):
+    """Over the aligned layout the stats are one Spark job (five when
+    they were two JVM aggregations, two joins and a sort)."""
+    sc = spark.sparkContext
+    aligned = pt.align(fine_points)
+    try:
+        aligned.count()
+        sc.setJobGroup("cell_stats_jobs", "cell_stats")
+        pt.cell_stats(aligned, 3, fine_col="cell_fine")
+        jobs = sc.statusTracker().getJobIdsForGroup("cell_stats_jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        aligned.unpersist()
+    assert len(jobs) == 1
+
+
 def test_voronoi_centers_exact_matches_numpy(spark):
     """The distributed-argmax Gonzalez (reference O1/A2 parity path)
     must pick exactly the centers the same greedy picks over the full
